@@ -16,11 +16,14 @@ path so min/max stats prune country filters too.
 from __future__ import annotations
 
 import argparse
+from contextlib import nullcontext
 from datetime import datetime, timezone
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from eurostat_energy_etl_pipeline_spark.plans import staged
 
 MODES = ("append", "truncate", "full-refresh", "merge")
 
@@ -211,13 +214,14 @@ def write_warehouse(df: DataFrame, warehouse_dir: str, mode: str) -> None:
     the batch's partition footprint, not the table size. Production tables
     would use a transactional format (Delta/Iceberg MERGE = new files +
     metadata swap); this is the same plan shape over plain parquet, with the
-    affected-partition remainder staged via localCheckpoint so the read and
-    the overwrite of the same path don't collide."""
+    affected-partition remainder staged (`plans.staged`, released after the
+    write) so the read and the overwrite of the same path don't collide."""
     if mode not in MODES:
         raise ValueError(f"mode must be one of {MODES}, got {mode!r}")
     out = df.withColumn("year", F.year("time"))
     write_mode = "append" if mode == "append" else "overwrite"
     writer_opts = {}
+    rows = nullcontext(out)
     if mode == "merge":
         spark = df.sparkSession
         try:
@@ -239,18 +243,18 @@ def write_warehouse(df: DataFrame, warehouse_dir: str, mode: str) -> None:
                 [affected[k].eqNullSafe(keys[k]) for k in MERGE_KEY],
             )
             survivors = affected.join(F.broadcast(keys), cond, "left_anti")
-            out = survivors.unionByName(out).localCheckpoint(eager=True)
-    writer = (
-        out
-        # cluster within partitions by country for min/max stat pruning
-        .repartition("dataset_code", "year")
-        .sortWithinPartitions("country_code")
-        .write.mode(write_mode)
-        .partitionBy("dataset_code", "year")
-    )
-    for k, v in writer_opts.items():
-        writer = writer.option(k, v)
-    writer.parquet(warehouse_dir)
+            rows = staged(survivors.unionByName(out))
+    with rows as out:
+        (
+            out
+            # cluster within partitions by country for min/max stat pruning
+            .repartition("dataset_code", "year")
+            .sortWithinPartitions("country_code")
+            .write.mode(write_mode)
+            .options(**writer_opts)
+            .partitionBy("dataset_code", "year")
+            .parquet(warehouse_dir)
+        )
 
 
 def read_warehouse(spark: SparkSession, warehouse_dir: str) -> DataFrame:

@@ -15,8 +15,9 @@ Scale design:
 - Only partitions that NEED compaction (more files than
   ceil(bytes/target)) are rewritten; the rewrite reads just those
   partitions (partition-pruned scan) and uses the same
-  dynamic-partition-overwrite + localCheckpoint staging as the merge
-  path, so untouched partitions are never listed, read, or replaced.
+  dynamic-partition-overwrite + checkpoint staging (`plans.staged`) as
+  the merge path, so untouched partitions are never listed, read, or
+  replaced.
 - Output file count per partition is sized to the partition's bytes:
   rows are repartitioned on (partition cols + a per-partition bucket
   salt) so a 100 GB partition compacts to many target-size files in
@@ -31,6 +32,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from eurostat_energy_etl_pipeline_spark.plans import staged
 
 PARTITION_COLS = ("dataset_code", "year")
 
@@ -143,17 +146,18 @@ def compact_warehouse(
     # still co-locate two buckets in one task, so the contract is "close
     # to", not "exactly", the target count (see docstring).
     n_out_total = sum(tgt for _, tgt in todo)
-    staged = (
-        salted.repartition(n_out_total, *PARTITION_COLS, "_bucket")
-        .drop("_n_out", "_bucket")
-        .localCheckpoint(eager=True)  # sever lineage: we overwrite our input
-    )
-    (
-        staged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*PARTITION_COLS)
-        .parquet(warehouse_dir)
-    )
+    # staged: sever lineage, since we overwrite our input
+    with staged(
+        salted.repartition(n_out_total, *PARTITION_COLS, "_bucket").drop(
+            "_n_out", "_bucket"
+        )
+    ) as rows:
+        (
+            rows.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(*PARTITION_COLS)
+            .parquet(warehouse_dir)
+        )
     after = {
         (s.dataset_code, s.year): s.n_files
         for s in warehouse_file_stats(spark, warehouse_dir)

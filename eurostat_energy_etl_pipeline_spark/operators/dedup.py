@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from eurostat_energy_etl_pipeline_spark.functions.numeric import portable_round
 from eurostat_energy_etl_pipeline_spark.functions.parallelism import widen_if_narrow
 from eurostat_energy_etl_pipeline_spark.operators.text import whitespace_tokens
+from eurostat_energy_etl_pipeline_spark.plans import staged
 
 
 def exact_dedup(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
@@ -482,6 +483,23 @@ def _hadoop_fs(spark, path: str):
     return fs, jpath
 
 
+def _delete_absent_partitions(rows: DataFrame, path: str, col: str, touched):
+    """Remove each ``{path}/{col}=v`` directory for a touched value ``v``
+    that no longer occurs in ``rows``, the frame just written there with
+    dynamic partition overwrite. That overwrite only replaces the
+    partitions PRESENT in its output, so a partition whose every row was
+    tombstoned would silently stay stale. The delete goes through the
+    filesystem the data lives on (object-store-safe, ADVICE r8)."""
+    spark = rows.sparkSession
+    present = {r[col] for r in rows.select(col).distinct().collect()}
+    fs, _ = _hadoop_fs(spark, path)
+    for v in touched:
+        if v not in present:
+            vpath = spark._jvm.org.apache.hadoop.fs.Path(f"{path}/{col}={v}")
+            if fs.exists(vpath):
+                fs.delete(vpath, True)
+
+
 def _active_spark(spark=None):
     if spark is not None:
         return spark
@@ -559,8 +577,8 @@ def merge_into_minhash_index(
          which dynamic overwrite would silently leave stale — those
          partitions are deleted explicitly (the object-store delete of a
          production run).
-    The old rows are localCheckpoint-ed (eagerly materialized) before the
-    overwrite so the write never reads the files it is replacing.
+    The old rows are staged (`plans.staged`: eagerly materialized, released
+    after the write) so the write never reads the files it is replacing.
     Re-signing uses the geometry from `_meta.json`, so a maintenance batch
     can never mix hash parameters with the base index."""
     meta = read_index_meta(path, spark)
@@ -635,27 +653,12 @@ def merge_into_minhash_index(
             .join(F.broadcast(affected), "id", "left_anti")
         )
         out = old if new_rows is None else old.unionByName(new_rows)
-        out = out.withColumn("bucket", bucket_of).localCheckpoint(eager=True)
-        present = {r["bucket"] for r in out.select("bucket").distinct().collect()}
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            out.write.mode("overwrite").partitionBy("bucket").parquet(tpath)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        fs, _ = _hadoop_fs(spark, tpath)
-        for b in buckets:
-            if b not in present:
-                # Object-store-safe delete (ADVICE r8): dynamic overwrite
-                # only replaces partitions PRESENT in the output, so a
-                # fully-tombstoned bucket must be removed explicitly —
-                # through the same filesystem the data lives on.
-                bpath = spark._jvm.org.apache.hadoop.fs.Path(
-                    f"{tpath}/bucket={b}"
-                )
-                if fs.exists(bpath):
-                    fs.delete(bpath, True)
-        audit[f"{table}_rows_written"] = out.count()
+        with staged(out.withColumn("bucket", bucket_of)) as rows:
+            rows.write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy("bucket").parquet(tpath)
+            _delete_absent_partitions(rows, tpath, "bucket", buckets)
+            audit[f"{table}_rows_written"] = rows.count()
     if sig is not None:
         audit["n_upserts"] = eff_ups.count()
         sig.unpersist()
@@ -1030,11 +1033,11 @@ def connected_components(
     # declare them so lifetime gates don't read them as pin leaks
     from eurostat_energy_etl_pipeline_spark import plans as _plans
 
-    edges = _plans.plan_checkpoint(edges)
+    edges = _plans.at_rest(edges)
     prev = _checksum(edges)
     converged = False
     for _ in range(max_iter):
-        edges = _plans.plan_checkpoint(_small_star(_large_star(edges)))
+        edges = _plans.at_rest(_small_star(_large_star(edges)))
         cur = _checksum(edges)
         if cur == prev:
             converged = True

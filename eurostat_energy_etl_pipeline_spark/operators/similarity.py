@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from eurostat_energy_etl_pipeline_spark.functions.parallelism import widen_if_narrow
+from eurostat_energy_etl_pipeline_spark.plans import staged
 
 
 def _as_double(col: Column) -> Column:
@@ -716,7 +717,7 @@ def merge_into_ivf_index(
     encoding depend on data this function must not re-derive — rebuild
     quantized indexes from the maintained float one."""
     from eurostat_energy_etl_pipeline_spark.operators.dedup import (
-        _hadoop_fs,
+        _delete_absent_partitions,
         read_index_meta,
     )
 
@@ -808,70 +809,56 @@ def merge_into_ivf_index(
         )
     )
     out = old if eff_ups is None else old.unionByName(eff_ups)
-    out = out.localCheckpoint(eager=True)
-
-    if recenter_threshold is not None and touched:
-        # post-merge per-cell mean on the integer grid — the trainer's
-        # exact floor((2s+n)/2n) Lloyd update, computed from O(nlist*dim)
-        # aggregated rows, never per-vector driver data
-        stats = (
-            out.select(
-                "cell",
-                F.posexplode(grid_int_col(F.col(vec_col))).alias(
-                    "pos", "g"
-                ),
-            )
-            .groupBy("cell", "pos")
-            .agg(F.sum("g").alias("s"), F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        dim = cents.shape[1]
-        sums = {}
-        for r in stats:
-            sums.setdefault(r["cell"], np.zeros((dim, 2), dtype=np.int64))[
-                r["pos"]
-            ] = (r["s"], r["n"])
-        moved = False
-        for cell, sn in sums.items():
-            n = int(sn[0, 1])
-            if n == 0:
-                continue
-            mean = np.floor_divide(2 * sn[:, 0] + n, 2 * n)
-            drift = int(((mean - cents[cell]) ** 2).sum())
-            if drift > recenter_threshold:
-                cents[cell] = mean
-                audit["recentered"].append(int(cell))
-                moved = True
-        if moved:
-            rows = pd.DataFrame(
-                {
-                    "cell": range(len(cents)),
-                    "centroid": [[int(x) for x in c] for c in cents],
-                }
-            )
-            spark.createDataFrame(
-                rows, "cell int, centroid array<long>"
-            ).coalesce(1).write.mode("overwrite").parquet(
-                f"{path}_centroids"
-            )
-
-    prev = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        out.write.mode("overwrite").partitionBy("cell").parquet(path)
-        present = {
-            r["cell"] for r in out.select("cell").distinct().collect()
-        }
-        fs, _ = _hadoop_fs(spark, path)
-        for c in touched:
-            if c not in present:
-                cpath = spark._jvm.org.apache.hadoop.fs.Path(
-                    f"{path}/cell={c}"
+    with staged(out) as out:
+        if recenter_threshold is not None and touched:
+            # post-merge per-cell mean on the integer grid — the
+            # trainer's exact floor((2s+n)/2n) Lloyd update, computed from
+            # O(nlist*dim) aggregated rows, never per-vector driver data
+            stats = (
+                out.select(
+                    "cell",
+                    F.posexplode(grid_int_col(F.col(vec_col))).alias(
+                        "pos", "g"
+                    ),
                 )
-                if fs.exists(cpath):
-                    fs.delete(cpath, True)
+                .groupBy("cell", "pos")
+                .agg(F.sum("g").alias("s"), F.count(F.lit(1)).alias("n"))
+                .collect()
+            )
+            dim = cents.shape[1]
+            sums = {}
+            for r in stats:
+                sums.setdefault(
+                    r["cell"], np.zeros((dim, 2), dtype=np.int64)
+                )[r["pos"]] = (r["s"], r["n"])
+            moved = False
+            for cell, sn in sums.items():
+                n = int(sn[0, 1])
+                if n == 0:
+                    continue
+                mean = np.floor_divide(2 * sn[:, 0] + n, 2 * n)
+                drift = int(((mean - cents[cell]) ** 2).sum())
+                if drift > recenter_threshold:
+                    cents[cell] = mean
+                    audit["recentered"].append(int(cell))
+                    moved = True
+            if moved:
+                rows = pd.DataFrame(
+                    {
+                        "cell": range(len(cents)),
+                        "centroid": [[int(x) for x in c] for c in cents],
+                    }
+                )
+                spark.createDataFrame(
+                    rows, "cell int, centroid array<long>"
+                ).coalesce(1).write.mode("overwrite").parquet(
+                    f"{path}_centroids"
+                )
+
+        out.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("cell").parquet(path)
+        _delete_absent_partitions(out, path, "cell", touched)
         # sidecar: rewrite the affected id-buckets from the post-merge
         # membership of the touched cells
         side_old = (
@@ -883,29 +870,15 @@ def merge_into_ivf_index(
             F.col(id_col).alias("id"),
             F.col("cell").cast("int").alias("cell"),
         ).join(F.broadcast(affected), "id", "left_semi")
-        side = (
+        with staged(
             side_old.select("id", "cell")
             .unionByName(side_new)
-            .withColumn(
-                "idb", F.pmod(F.col("id"), F.lit(nb)).cast("int")
-            )
-            .localCheckpoint(eager=True)
-        )
-        side.write.mode("overwrite").partitionBy("idb").parquet(
-            f"{path}_ids"
-        )
-        side_present = {
-            r["idb"] for r in side.select("idb").distinct().collect()
-        }
-        for b in idbs:
-            if b not in side_present:
-                bpath = spark._jvm.org.apache.hadoop.fs.Path(
-                    f"{path}_ids/idb={b}"
-                )
-                if fs.exists(bpath):
-                    fs.delete(bpath, True)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+            .withColumn("idb", F.pmod(F.col("id"), F.lit(nb)).cast("int"))
+        ) as side:
+            side.write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy("idb").parquet(f"{path}_ids")
+            _delete_absent_partitions(side, f"{path}_ids", "idb", idbs)
     if eff_ups is not None:
         eff_ups.unpersist()
     affected.unpersist()

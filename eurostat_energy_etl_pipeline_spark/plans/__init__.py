@@ -13,6 +13,7 @@ import os
 import threading
 from collections import OrderedDict
 from collections.abc import Callable
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -121,53 +122,17 @@ def pin(df: DataFrame) -> DataFrame:
     return df
 
 
-# name -> checkpointed RDD ids for the query's CURRENT build, or None
-# when a kernel declared plan-lifetime blocks without capturing ids
-# (legacy note_checkpoint_blocks() path). Reset per build (the `query`
-# wrapper pops the entry on every plan-cache miss) so the registry
-# reflects the plan as built NOW, not historical builds (ADVICE r13).
-_CHECKPOINT_USERS: dict[str, set[int] | None] = {}
+# name -> the plan-lifetime checkpoint RDD ids of the query's CURRENT
+# build. Reset per build (the `query` wrapper pops the entry on every
+# plan-cache miss) so the registry reflects the plan as built NOW, not
+# historical builds (ADVICE r13).
+_CHECKPOINT_USERS: dict[str, set[int]] = {}
 
 
-def _register_checkpoint(ids: set[int] | None) -> None:
-    stack = _BUILDING.stack
-    name = stack[-1] if stack else "__anon__"
-    with _PINNED_LOCK:
-        cur = _CHECKPOINT_USERS.get(name, set())
-        if ids is None or cur is None:
-            _CHECKPOINT_USERS[name] = None
-        else:
-            _CHECKPOINT_USERS[name] = cur | ids
-
-
-def note_checkpoint_blocks() -> None:
-    """Structural checkpoint-lifetime declaration (VERDICT r12 item 4):
-    kernels that ``localCheckpoint`` intermediates whose blocks live as
-    long as the RETURNED plan call this while the plan is being built.
-    Lifetime gates then KNOW a query's post-release leftovers are
-    plan-managed checkpoint blocks — released only when the plan itself
-    is dropped and GC'd. Prefer :func:`plan_checkpoint`, which also
-    captures WHICH block ids are plan-managed so the gate can still
-    flag a genuine pin() leak in checkpoint-using queries (ADVICE r13);
-    this bare form marks the query's block set as unknown (gate goes
-    lenient). Attribution uses the thread-local build stack."""
-    _register_checkpoint(None)
-
-
-def plan_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
-    """``localCheckpoint`` an intermediate AND register the resulting
-    block ids as plan-lifetime under the query being built. The id
-    capture diffs the session's persistent-RDD set around the
-    checkpoint — exact in a single-threaded build; a concurrent build on
-    another thread can at worst attribute its own fresh blocks here too,
-    which only widens the gate's tolerated set (never hides a leak in
-    the single-threaded gate run)."""
-    sc = df.sparkSession.sparkContext
-    before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-    out = df.localCheckpoint(eager=eager)
-    after = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-    _register_checkpoint(after - before)
-    return out
+def _checkpoint_rdd(df: DataFrame):
+    """The JVM RDD holding a localCheckpoint'd DataFrame's blocks (its
+    LogicalRDD leaf). ``DataFrame.unpersist()`` does not release them."""
+    return df._jdf.queryExecution().logical().rdd()
 
 
 def at_rest(df: DataFrame) -> DataFrame:
@@ -179,10 +144,33 @@ def at_rest(df: DataFrame) -> DataFrame:
     pins re-embeds each build subtree at every reference (q192's first
     cut produced a combinatorial ~24 MB logical plan that Catalyst
     re-optimized on EVERY action); leaf RDDs keep the returned plan
-    proportional to the merge logic itself. Blocks are plan-lifetime
-    (released when the plan is dropped and GC'd) — self-declared with
-    their ids via the structural checkpoint registry."""
-    return plan_checkpoint(df, eager=True)
+    proportional to the merge logic itself.
+
+    Blocks are plan-lifetime (released when the plan is dropped and
+    GC'd): the checkpoint's RDD id, read off the returned DataFrame, is
+    registered under the query being built (thread-local build stack),
+    so lifetime gates can tell these blocks from a pin() leak."""
+    out = df.localCheckpoint(eager=True)
+    rdd_id = _checkpoint_rdd(out).id()
+    stack = _BUILDING.stack
+    name = stack[-1] if stack else "__anon__"
+    with _PINNED_LOCK:
+        _CHECKPOINT_USERS.setdefault(name, set()).add(rdd_id)
+    return out
+
+
+@contextmanager
+def staged(df: DataFrame):
+    """Operation-lifetime checkpoint: yields ``df`` eagerly materialized
+    with its lineage cut, and releases the blocks on exit. For operations
+    that stage rows and then overwrite their own input (merge,
+    compaction, index maintenance): the write never reads the files it is
+    replacing, and no staging blocks outlive the call."""
+    out = df.localCheckpoint(eager=True)
+    try:
+        yield out
+    finally:
+        _checkpoint_rdd(out).unpersist(False)
 
 
 def checkpoint_users() -> frozenset[str]:
@@ -194,7 +182,7 @@ def checkpoint_users() -> frozenset[str]:
 
 def checkpoint_ids(name: str) -> frozenset[int] | None:
     """The plan-lifetime block ids `name`'s current build declared, or
-    None when any declaration came through the id-less legacy path."""
+    None when it declared none."""
     with _PINNED_LOCK:
         ids = _CHECKPOINT_USERS.get(name)
         return None if ids is None else frozenset(ids)

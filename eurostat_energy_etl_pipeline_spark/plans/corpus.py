@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from eurostat_energy_etl_pipeline_spark.catalog import load_tables
+from eurostat_energy_etl_pipeline_spark.catalog import load_tables, session_memo
 from eurostat_energy_etl_pipeline_spark.functions import (
     exact_sum,
     ordered_output,
@@ -577,24 +577,15 @@ _ND_INDEX: dict[tuple[str, str], str] = {}
 
 
 def _neardup_index_path(spark, sf_dir: str) -> str:
-    import hashlib
-    import tempfile
-
     from eurostat_energy_etl_pipeline_spark.operators.dedup import (
         write_minhash_index,
     )
 
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    path = _ND_INDEX.get(key)
-    if path is None:
-        tag = hashlib.md5(f"{app}:{sf_dir}".encode()).hexdigest()[:12]
-        path = f"{tempfile.gettempdir()}/spark_graft_nd_index_{tag}"
-        t = load_tables(spark, sf_dir)
-        corpus = t["documents"].where(F.col("doc_id") % 5 != 0)
-        write_minhash_index(corpus, path)
-        _ND_INDEX[key] = path
-    return path
+    def build(path):
+        docs = load_tables(spark, sf_dir)["documents"]
+        write_minhash_index(docs.where(F.col("doc_id") % 5 != 0), path)
+
+    return session_memo(_ND_INDEX, spark, sf_dir, build, artifact="nd_index")
 
 
 @query(
@@ -1756,20 +1747,12 @@ _MAINT_INDEX: dict = {}
 
 
 def _maintained_index_path(spark, sf_dir: str) -> str:
-    import hashlib
-    import tempfile
-
     from eurostat_energy_etl_pipeline_spark.operators.dedup import (
         merge_into_minhash_index,
         write_minhash_index,
     )
 
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    path = _MAINT_INDEX.get(key)
-    if path is None:
-        tag = hashlib.md5(f"{app}:{sf_dir}".encode()).hexdigest()[:12]
-        path = f"{tempfile.gettempdir()}/spark_graft_maint_index_{tag}"
+    def build(path):
         docs = load_tables(spark, sf_dir)["documents"]
         write_minhash_index(
             docs.where(F.col("doc_id") % 3 != 0), path, num_buckets=16
@@ -1789,8 +1772,10 @@ def _maintained_index_path(spark, sf_dir: str) -> str:
         merge_into_minhash_index(
             spark, path, upserts=upserts, tombstone_ids=tombstones
         )
-        _MAINT_INDEX[key] = path
-    return path
+
+    return session_memo(
+        _MAINT_INDEX, spark, sf_dir, build, artifact="maint_index"
+    )
 
 
 @query(

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from eurostat_energy_etl_pipeline_spark.catalog import load_tables
+from eurostat_energy_etl_pipeline_spark.catalog import load_tables, session_memo
 from eurostat_energy_etl_pipeline_spark.functions import (
     exact_sum,
     ordered_output,
@@ -3373,29 +3373,13 @@ def _scd2_rows(status_days):
 
 
 def _scd2_base_path(spark, sf_dir: str) -> str:
-    import hashlib
-    import tempfile
-
-    import shutil
-
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    # evict entries keyed by stopped SparkContexts AND remove their temp
-    # parquet dirs — the _PREPARED_GRAPHS stale-appId pattern plus disk
-    # cleanup, so repeated sessions don't leak scd2_base_* dirs in tempdir
-    # (ADVICE r11)
-    for stale in [k for k in _SCD2_BASE if k[0] != app]:
-        shutil.rmtree(_SCD2_BASE.pop(stale), ignore_errors=True)
-    path = _SCD2_BASE.get(key)
-    if path is None:
-        tag = hashlib.md5(f"{app}:{sf_dir}:scd2".encode()).hexdigest()[:12]
-        path = f"{tempfile.gettempdir()}/spark_graft_scd2_base_{tag}"
+    def build(path):
         ev = load_tables(spark, sf_dir)["events"].where(
             F.col("ts").cast("date") <= F.lit(_SCD2_SPLIT).cast("date")
         )
         _scd2_rows(_daily_status(ev)).write.mode("overwrite").parquet(path)
-        _SCD2_BASE[key] = path
-    return path
+
+    return session_memo(_SCD2_BASE, spark, sf_dir, build, artifact="scd2_base")
 
 
 @query(

@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from eurostat_energy_etl_pipeline_spark.catalog import load_tables
+from eurostat_energy_etl_pipeline_spark.catalog import load_tables, session_memo
 from eurostat_energy_etl_pipeline_spark.functions import presentation_sort
 from eurostat_energy_etl_pipeline_spark import plans
 from eurostat_energy_etl_pipeline_spark.plans import query
@@ -47,9 +47,7 @@ def _grid(col):
     return F.floor(col * _G + 0.5) / _G
 
 
-#: q99's prepared graph per (applicationId, sf_dir) — the T4
-#: session-lifetime cache pattern (catalog.cached_view), held here
-#: because the cached value is a (DataFrame, DataFrame, int) triple.
+#: q99's prepared graph per (applicationId, sf_dir), a T4 session memo.
 _PREPARED_GRAPHS: dict[tuple[str, str], tuple[DataFrame, DataFrame, int]] = {}
 
 
@@ -110,14 +108,8 @@ def _shared_purchase_graph(spark, sf_dir: str):
     q99/q172/q189, prepared once per (session, sf_dir) with
     :func:`prepare_graph` and cached under the T4 contract. Nodes are
     the order-isomorphic int64 encodings (see :func:`_enc_node`)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    # Evict entries from previous SparkContexts (r6 advice): after a
-    # session restart in the same process the old keys reference
-    # DataFrames of a stopped context and can never be hit again.
-    for stale in [k for k in _PREPARED_GRAPHS if k[0] != key[0]]:
-        del _PREPARED_GRAPHS[stale]
-    prepared = _PREPARED_GRAPHS.get(key)
-    if prepared is None:
+
+    def build():
         t = load_tables(spark, sf_dir)
         e0 = (
             t["orders"]
@@ -131,9 +123,9 @@ def _shared_purchase_graph(spark, sf_dir: str):
         edges = e0.unionByName(
             e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        prepared = prepare_graph(edges)
-        _PREPARED_GRAPHS[key] = prepared
-    return prepared
+        return prepare_graph(edges)
+
+    return session_memo(_PREPARED_GRAPHS, spark, sf_dir, build)
 
 
 def prepare_graph(
@@ -267,7 +259,7 @@ def pagerank(
         # Materialize before dropping the pins: localCheckpoint executes
         # the plan and truncates lineage, so the returned DataFrame no
         # longer references nodes/base and the unpersist is safe.
-        ranks = plans.plan_checkpoint(ranks)
+        ranks = plans.at_rest(ranks)
         nodes.unpersist()
         base.unpersist()
     return ranks
@@ -658,7 +650,7 @@ def q189(spark, sf_dir):
     _nodes, base, _n = prepared
     edges = base.select("src", "dst")
     # per-level frontier/visited checkpoints are plan-lifetime blocks
-    seeds = plans.plan_checkpoint(
+    seeds = plans.at_rest(
         t["customer"]
         .where(F.col("c_nationkey") == 0)
         .select(_enc_node("c_custkey", is_supplier=False).alias("node"))
@@ -667,14 +659,14 @@ def q189(spark, sf_dir):
     counts = [seeds.agg(F.count(F.lit(1)).cast("long").alias("n"))]
     visited, frontier = seeds, seeds
     for _hop in range(1, 4):
-        nxt = plans.plan_checkpoint(
+        nxt = plans.at_rest(
             edges.join(frontier, edges["src"] == frontier["node"])
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited, "node", "left_anti")
         )
         counts.append(nxt.agg(F.count(F.lit(1)).cast("long").alias("n")))
-        visited = plans.plan_checkpoint(visited.unionByName(nxt))
+        visited = plans.at_rest(visited.unionByName(nxt))
         frontier = nxt
     out = None
     for hop, c in enumerate(counts):

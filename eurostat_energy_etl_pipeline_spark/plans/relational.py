@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from eurostat_energy_etl_pipeline_spark.catalog import load_tables
+from eurostat_energy_etl_pipeline_spark.catalog import load_tables, session_memo
 from eurostat_energy_etl_pipeline_spark.functions import (
     exact_avg,
     exact_sum,
@@ -1511,18 +1511,9 @@ _MV_BASE: dict[tuple[str, str], str] = {}
 
 
 def _mv_base_path(spark, sf_dir: str) -> str:
-    import hashlib
-    import tempfile
-
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    path = _MV_BASE.get(key)
-    if path is None:
-        tag = hashlib.md5(f"{app}:{sf_dir}:mv".encode()).hexdigest()[:12]
-        path = f"{tempfile.gettempdir()}/spark_graft_mv_base_{tag}"
-        t = load_tables(spark, sf_dir)
+    def build(path):
         (
-            t["orders"]
+            load_tables(spark, sf_dir)["orders"]
             .where(F.year("o_orderdate") <= 1996)
             .groupBy("o_custkey")
             .agg(
@@ -1534,8 +1525,8 @@ def _mv_base_path(spark, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(path)
         )
-        _MV_BASE[key] = path
-    return path
+
+    return session_memo(_MV_BASE, spark, sf_dir, build, artifact="mv_base")
 
 
 @query(

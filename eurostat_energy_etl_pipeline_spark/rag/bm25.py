@@ -29,11 +29,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from eurostat_energy_etl_pipeline_spark.catalog import session_memo
 from eurostat_energy_etl_pipeline_spark.functions.parallelism import widen_if_narrow
 from eurostat_energy_etl_pipeline_spark.operators.text import (
     ENGLISH_STOPWORDS,
     whitespace_tokens,
 )
+from eurostat_energy_etl_pipeline_spark.plans import staged
 
 K1 = 1.2
 B = 0.75
@@ -134,13 +136,14 @@ _BM25_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def documents_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BM25_CACHE.get(key)
-    if hit is None:
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        hit = build_bm25_index(docs, "text", "doc_id")
-        _BM25_CACHE[key] = hit
-    return hit
+    return session_memo(
+        _BM25_CACHE,
+        spark,
+        sf_dir,
+        lambda: build_bm25_index(
+            spark.read.parquet(f"{sf_dir}/documents.parquet"), "text", "doc_id"
+        ),
+    )
 
 
 SEARCH_QUERY = "spark shuffle join performance"
@@ -491,13 +494,11 @@ def compact_postings_index(spark: SparkSession, path: str) -> dict:
         tpath = f"{path}/{table}"
         df = spark.read.parquet(tpath)
         audit[f"{table}_before"] = df.count()
-        live = (
-            _live(df, mask)
-            .withColumn("gen", F.lit(0).cast("int"))
-            .localCheckpoint(eager=True)
-        )
-        live.write.mode("overwrite").partitionBy(part).parquet(tpath)
-        audit[f"{table}_after"] = live.count()
+        with staged(
+            _live(df, mask).withColumn("gen", F.lit(0).cast("int"))
+        ) as live:
+            live.write.mode("overwrite").partitionBy(part).parquet(tpath)
+            audit[f"{table}_after"] = live.count()
     spark.createDataFrame([], "id long, before_gen int").write.mode(
         "overwrite"
     ).parquet(f"{path}/deletes")

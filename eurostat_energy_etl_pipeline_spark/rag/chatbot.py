@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from eurostat_energy_etl_pipeline_spark.catalog import session_memo
 from eurostat_energy_etl_pipeline_spark.plans.insights import insights_table
 from eurostat_energy_etl_pipeline_spark.rag.tfidf import semantic_search
 
@@ -26,12 +27,12 @@ _INSIGHTS_BM25_CACHE: dict[tuple[str, str], "object"] = {}
 def _insights_bm25_index(spark: SparkSession, sf_dir: str, corpus):
     from eurostat_energy_etl_pipeline_spark.rag.bm25 import build_bm25_index
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _INSIGHTS_BM25_CACHE.get(key)
-    if hit is None:
-        hit = build_bm25_index(corpus, "text", "doc_id")
-        _INSIGHTS_BM25_CACHE[key] = hit
-    return hit
+    return session_memo(
+        _INSIGHTS_BM25_CACHE,
+        spark,
+        sf_dir,
+        lambda: build_bm25_index(corpus, "text", "doc_id"),
+    )
 
 
 def route(question: str) -> str:

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from eurostat_energy_etl_pipeline_spark.catalog import session_memo
 from eurostat_energy_etl_pipeline_spark.functions.parallelism import widen_if_narrow
 from eurostat_energy_etl_pipeline_spark.operators.text import (
     ENGLISH_STOPWORDS,
@@ -191,13 +192,14 @@ _INDEX_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 def documents_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build-once posting-list index over the documents fixture (T4)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _INDEX_CACHE.get(key)
-    if hit is None:
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        hit = build_index(docs, "text", "doc_id")
-        _INDEX_CACHE[key] = hit
-    return hit
+    return session_memo(
+        _INDEX_CACHE,
+        spark,
+        sf_dir,
+        lambda: build_index(
+            spark.read.parquet(f"{sf_dir}/documents.parquet"), "text", "doc_id"
+        ),
+    )
 
 
 SEARCH_QUERY = "spark shuffle join performance"

@@ -44,6 +44,10 @@ def _batch(spark, n=5):
     return spark.createDataFrame(rows)
 
 
+def _persistent_rdd_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
 def test_mode_matrix(spark, tmp_path):
     wh = str(tmp_path / "obs")
     batch = _batch(spark)
@@ -88,7 +92,10 @@ def test_merge_upserts_and_preserves_untouched_partitions(spark, tmp_path):
             ),  # insert: new key in a new year partition
         ]
     )
+    before = _persistent_rdd_ids(spark)
     run_etl(spark, [delta], wh, "merge", load_ts=t1)
+    # the merge's staging checkpoint is released when the write is done
+    assert _persistent_rdd_ids(spark) - before == set()
 
     out = read_warehouse(spark, wh)
     assert out.count() == 6  # 5 original - 1 replaced + 2 batch rows... = 6

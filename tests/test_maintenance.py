@@ -59,7 +59,11 @@ def test_compact_preserves_rows_and_hits_target(spark, warehouse):
     ctl_files = {
         s.year: s.n_files for s in warehouse_file_stats(spark, warehouse)
     }
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    cached_before = set(persistent().keySet().toArray())
     report = compact_warehouse(spark, warehouse)
+    # the compaction's staging checkpoint is released when the write is done
+    assert set(persistent().keySet().toArray()) - cached_before == set()
     assert report["partitions_compacted"] >= 1
     assert report["files_after"] < report["files_before"]
     stats = {s.year: s for s in warehouse_file_stats(spark, warehouse)}

@@ -805,7 +805,7 @@ def test_pinned_intermediates_release_to_baseline(spark, queries):
     # EVERY pin-using query — no exclusions. Queries whose kernels
     # localCheckpoint plan-lifetime intermediates (connected_components,
     # BFS levels, own-lifetime pagerank) self-declare via
-    # plans.note_checkpoint_blocks() during build; the loop below reads
+    # plans.at_rest() during build; the loop below reads
     # that registry instead of a hand-maintained exclusion list
     # (VERDICT r12 item 4): pins must still fully release for them, but
     # their declared checkpoint blocks may legitimately outlive the
@@ -871,10 +871,9 @@ def test_pinned_intermediates_release_to_baseline(spark, queries):
         if name in P.checkpoint_users():
             # self-declared plan-lifetime checkpoint blocks: leftovers
             # are checkpointed intermediates the LIVE plan still
-            # references — but ONLY those. plan_checkpoint captured the
+            # references — but ONLY those. at_rest registered the
             # declared block ids, so a genuine pin() leak in a
-            # checkpoint-using query still fails here (ADVICE r13);
-            # ids=None (legacy bare declaration) stays lenient.
+            # checkpoint-using query still fails here (ADVICE r13).
             declared = P.checkpoint_ids(name)
             if declared is not None:
                 stray = leftover - declared

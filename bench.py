@@ -127,8 +127,8 @@ def main() -> None:
     # while a query is being served), but nothing below re-reads them and
     # a 163-query session must not accumulate cached blocks it no longer
     # needs. The throughput pass below therefore re-executes unpinned —
-    # slightly conservative for the 10 pin-using queries
-    # (q86/q102/q122/q128/q133/q136/q138/q140/q144/q154).
+    # slightly conservative for the pin-using queries (the list in
+    # tests/test_plan_quality.py::test_pinned_intermediates_release_to_baseline).
     from eurostat_energy_etl_pipeline_spark import plans as plans_mod
 
     plans_mod.release_pins()

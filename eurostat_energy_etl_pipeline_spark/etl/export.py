@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from eurostat_energy_etl_pipeline_spark.operators.ranking import global_row_number
 from eurostat_energy_etl_pipeline_spark.operators.text import token_count
+from eurostat_energy_etl_pipeline_spark.plans import pin, scope
 
 
 def export_training_shards(
@@ -47,12 +48,13 @@ def export_training_shards(
     hashed = df.withColumn("__h", F.xxhash64(F.col(text_col)))
     # (hash, id) is a unique total order even across exact-duplicate texts.
     ranked = global_row_number(hashed, ["__h", id_col], out_col="rank")
-    sharded = ranked.withColumn(
-        "shard_id",
-        ((F.col("rank") - 1) / F.lit(docs_per_shard)).cast("long"),
-    ).withColumn("n_tokens", token_count(F.col(text_col)))
-    sharded.persist()
-    try:
+    with scope():
+        sharded = pin(
+            ranked.withColumn(
+                "shard_id",
+                ((F.col("rank") - 1) / F.lit(docs_per_shard)).cast("long"),
+            ).withColumn("n_tokens", token_count(F.col(text_col)))
+        )
         (
             sharded.drop("__h")
             .repartition("shard_id")
@@ -76,8 +78,6 @@ def export_training_shards(
             .orderBy("shard_id")
         )
         manifest.write.mode("overwrite").parquet(f"{out_dir}/manifest")
-    finally:
-        sharded.unpersist()
     return manifest
 
 

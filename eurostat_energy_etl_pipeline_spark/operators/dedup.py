@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from eurostat_energy_etl_pipeline_spark.functions.numeric import portable_round
 from eurostat_energy_etl_pipeline_spark.functions.parallelism import widen_if_narrow
 from eurostat_energy_etl_pipeline_spark.operators.text import whitespace_tokens
-from eurostat_energy_etl_pipeline_spark.plans import staged
+from eurostat_energy_etl_pipeline_spark.plans import at_rest, pin, scope, staged
 
 
 def exact_dedup(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
@@ -228,72 +228,6 @@ def minhash_signatures(
     return agg.select(*cols)
 
 
-class _PersistedPlanCache:
-    """LRU memo for persisted signature DataFrames. Bounded: evicting an
-    entry unpersists it, so a long session probing many distinct corpora
-    cannot grow executor storage without limit (the unbounded-dict version
-    leaked one pinned table per distinct input). Keys include the schema
-    string as a cheap plan fingerprint alongside the 32-bit semanticHash —
-    a semanticHash collision between different inputs would otherwise
-    silently serve another plan's signatures."""
-
-    def __init__(self, maxsize: int = 8) -> None:
-        from collections import OrderedDict
-
-        self._d: "OrderedDict[tuple, DataFrame]" = OrderedDict()
-        self._maxsize = maxsize
-
-    @staticmethod
-    def key_of(df: DataFrame, *parts) -> tuple | None:
-        try:
-            return (
-                df.sparkSession.sparkContext.applicationId,
-                df.semanticHash(),
-                df.schema.simpleString(),
-                *parts,
-            )
-        except Exception:
-            return None  # semanticHash unavailable -> caller runs uncached
-
-    def get(self, key: tuple) -> DataFrame | None:
-        hit = self._d.get(key)
-        if hit is not None:
-            self._d.move_to_end(key)
-        return hit
-
-    def put(self, key: tuple, df: DataFrame) -> None:
-        self._d[key] = df
-        self._d.move_to_end(key)
-        while len(self._d) > self._maxsize:
-            _, evicted = self._d.popitem(last=False)
-            try:
-                evicted.unpersist()
-            except Exception:
-                pass  # session already stopped; nothing to release
-
-
-# Persisted-signature memo per (session, input plan, params): without it
-# every direct minhash_lsh_pairs call pins a fresh copy of the signature
-# table for the life of the session.
-_SIG_CACHE = _PersistedPlanCache()
-
-
-def _signature_table(
-    df: DataFrame, text_col: str, id_col: str, num_hashes: int, shingle_k: int
-) -> DataFrame:
-    key = _PersistedPlanCache.key_of(df, text_col, id_col, num_hashes, shingle_k)
-    if key is not None:
-        hit = _SIG_CACHE.get(key)
-        if hit is not None:
-            return hit
-    sig = minhash_signatures(
-        df, text_col, id_col, num_hashes, shingle_k, keep_shingles=True
-    ).persist()
-    if key is not None:
-        _SIG_CACHE.put(key, sig)
-    return sig
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -324,14 +258,17 @@ def minhash_lsh_pairs(
     """
     rows = num_hashes // bands
     # The signature table (id, sig, distinct numeric shingle set) is
-    # materialized ONCE (persisted): it feeds both candidate generation and
+    # materialized ONCE (pinned): it feeds both candidate generation and
     # verification, and recomputing it per consumer would re-tokenize the
     # corpus twice. At warehouse scale this is the signature table you
-    # would write to storage before the pair-join step; persist() is the
-    # in-session equivalent (evictable, spills to disk). Memoized per
-    # (session, input plan, params) so repeated direct calls reuse one
-    # pinned table instead of accumulating storage.
-    sig = _signature_table(df, text_col, id_col, num_hashes, shingle_k)
+    # would write to storage before the pair-join step; a pin is the
+    # in-session equivalent (evictable, spills to disk), released with
+    # the plan that built it.
+    sig = pin(
+        minhash_signatures(
+            df, text_col, id_col, num_hashes, shingle_k, keep_shingles=True
+        )
+    )
     # Band buckets carry only (id, band hash) — the shingle sets never
     # enter the explode/self-join shuffles; they are joined back by id for
     # the (much smaller) verification set only.
@@ -434,10 +371,12 @@ def write_minhash_index(
     recorded in `{path}/_meta.json` so maintenance batches can never be
     signed with mismatched hash parameters."""
     rows = num_hashes // bands
-    sig = minhash_signatures(
-        df, text_col, id_col, num_hashes, shingle_k, keep_shingles=True
-    ).persist()
-    try:
+    with scope():
+        sig = pin(
+            minhash_signatures(
+                df, text_col, id_col, num_hashes, shingle_k, keep_shingles=True
+            )
+        )
         bands_df = _band_table(sig, bands, rows)
         sh_df = sig.select("id", "shset")
         if num_buckets:
@@ -457,8 +396,6 @@ def write_minhash_index(
         else:
             bands_df.write.mode("overwrite").parquet(f"{path}/bands")
             sh_df.write.mode("overwrite").parquet(f"{path}/shingles")
-    finally:
-        sig.unpersist()
     _write_index_meta(
         path,
         {
@@ -607,64 +544,61 @@ def merge_into_minhash_index(
         if upserts is not None
         else tomb.limit(0)
     )
-    affected = ups_ids.unionByName(tomb).distinct().persist()
-    buckets = sorted(
-        r["b"]
-        for r in affected.select(
-            F.pmod(F.col("id"), F.lit(nb)).cast("int").alias("b")
+    with scope():
+        affected = pin(ups_ids.unionByName(tomb).distinct())
+        buckets = sorted(
+            r["b"]
+            for r in affected.select(
+                F.pmod(F.col("id"), F.lit(nb)).cast("int").alias("b")
+            )
+            .distinct()
+            .collect()
         )
-        .distinct()
-        .collect()
-    )
-    n_tomb = tomb.count()
+        n_tomb = tomb.count()
 
-    # Tombstones win inside the batch: effective upserts are anti-joined.
-    eff_ups = None
-    if upserts is not None:
-        eff_ups = upserts.join(
-            F.broadcast(tomb), upserts[id_col] == tomb["id"], "left_anti"
-        )
-        sig = minhash_signatures(
-            eff_ups,
-            text_col,
-            id_col,
-            meta["num_hashes"],
-            meta["shingle_k"],
-            keep_shingles=True,
-        ).persist()
-        new_bands = _band_table(sig, meta["bands"], rows)
-        new_sh = sig.select("id", "shset")
-    else:
-        sig = None
-        new_bands = new_sh = None
+        # Tombstones win inside the batch: effective upserts are anti-joined.
+        eff_ups = None
+        if upserts is not None:
+            eff_ups = upserts.join(
+                F.broadcast(tomb), upserts[id_col] == tomb["id"], "left_anti"
+            )
+            sig = pin(
+                minhash_signatures(
+                    eff_ups,
+                    text_col,
+                    id_col,
+                    meta["num_hashes"],
+                    meta["shingle_k"],
+                    keep_shingles=True,
+                )
+            )
+            new_bands = _band_table(sig, meta["bands"], rows)
+            new_sh = sig.select("id", "shset")
+        else:
+            new_bands = new_sh = None
 
-    audit = {
-        "n_tombstones": n_tomb,
-        "buckets_touched": len(buckets),
-        "num_buckets": nb,
-    }
-    bucket_of = F.pmod(F.col("id"), F.lit(nb)).cast("int")
-    for table, new_rows in (("bands", new_bands), ("shingles", new_sh)):
-        tpath = f"{path}/{table}"
-        old = (
-            spark.read.parquet(tpath)
-            .where(F.col("bucket").isin(buckets))
-            .drop("bucket")
-            .join(F.broadcast(affected), "id", "left_anti")
-        )
-        out = old if new_rows is None else old.unionByName(new_rows)
-        with staged(out.withColumn("bucket", bucket_of)) as rows:
-            rows.write.mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).partitionBy("bucket").parquet(tpath)
-            _delete_absent_partitions(rows, tpath, "bucket", buckets)
-            audit[f"{table}_rows_written"] = rows.count()
-    if sig is not None:
-        audit["n_upserts"] = eff_ups.count()
-        sig.unpersist()
-    else:
-        audit["n_upserts"] = 0
-    affected.unpersist()
+        audit = {
+            "n_tombstones": n_tomb,
+            "buckets_touched": len(buckets),
+            "num_buckets": nb,
+        }
+        bucket_of = F.pmod(F.col("id"), F.lit(nb)).cast("int")
+        for table, new_rows in (("bands", new_bands), ("shingles", new_sh)):
+            tpath = f"{path}/{table}"
+            old = (
+                spark.read.parquet(tpath)
+                .where(F.col("bucket").isin(buckets))
+                .drop("bucket")
+                .join(F.broadcast(affected), "id", "left_anti")
+            )
+            out = old if new_rows is None else old.unionByName(new_rows)
+            with staged(out.withColumn("bucket", bucket_of)) as rows:
+                rows.write.mode("overwrite").option(
+                    "partitionOverwriteMode", "dynamic"
+                ).partitionBy("bucket").parquet(tpath)
+                _delete_absent_partitions(rows, tpath, "bucket", buckets)
+                audit[f"{table}_rows_written"] = rows.count()
+        audit["n_upserts"] = 0 if eff_ups is None else eff_ups.count()
     return audit
 
 
@@ -691,9 +625,11 @@ def match_against_index(
     backfill where the increment rivals the corpus, pass
     broadcast_new=False and AQE plans a regular shuffle join instead."""
     rows = num_hashes // bands
-    new_sig = minhash_signatures(
-        new_df, text_col, id_col, num_hashes, shingle_k, keep_shingles=True
-    ).persist()
+    new_sig = pin(
+        minhash_signatures(
+            new_df, text_col, id_col, num_hashes, shingle_k, keep_shingles=True
+        )
+    )
     new_banded = _band_table(new_sig, bands, rows).select(
         F.col("id").alias("new_id"), "band_idx", "band_hash"
     )
@@ -769,32 +705,6 @@ def simhash(col: Column, bits: int = 64, portable: bool = False) -> Column:
         return pd.Series(out)
 
     return _vote(hashes)
-
-
-# SimHash signature memo per (session, input plan, columns) — the signature
-# feeds BOTH sides of the band self-join, and an unpersisted plan would
-# re-tokenize and re-vote the whole corpus once per side (measured ~2x the
-# query's runtime at sf0.1). Mirrors _SIG_CACHE (bounded, unpersists on
-# eviction).
-_SIMHASH_CACHE = _PersistedPlanCache()
-
-
-def _simhash_table(
-    df: DataFrame, text_col: str, id_col: str, portable: bool = False
-) -> DataFrame:
-    key = _PersistedPlanCache.key_of(df, text_col, id_col, portable)
-    if key is not None:
-        hit = _SIMHASH_CACHE.get(key)
-        if hit is not None:
-            return hit
-    sigs = (
-        widen_if_narrow(df)
-        .select(F.col(id_col), simhash(F.col(text_col), portable=portable).alias("sig"))
-        .persist()
-    )
-    if key is not None:
-        _SIMHASH_CACHE.put(key, sigs)
-    return sigs
 
 
 def hamming_bands(
@@ -944,7 +854,14 @@ def simhash_near_dup_pairs(
     `portable=True` switches to the 60-bit md5-derived signature (4x15-bit
     bands) that DuckDB can recompute — the declared query's oracle mode."""
     sig_bits = PORTABLE_SIMHASH_BITS if portable else 64
-    sigs = _simhash_table(df, text_col, id_col, portable=portable)
+    # pinned: the signature feeds BOTH sides of the band self-join, and an
+    # unpinned plan would re-tokenize and re-vote the whole corpus once per
+    # side (measured ~2x the query's runtime at sf0.1)
+    sigs = pin(
+        widen_if_narrow(df).select(
+            F.col(id_col), simhash(F.col(text_col), portable=portable).alias("sig")
+        )
+    )
     return hamming_band_pairs(
         sigs,
         id_col=id_col,
@@ -1031,13 +948,11 @@ def connected_components(
 
     # the per-round checkpoints live as long as the returned plan —
     # declare them so lifetime gates don't read them as pin leaks
-    from eurostat_energy_etl_pipeline_spark import plans as _plans
-
-    edges = _plans.at_rest(edges)
+    edges = at_rest(edges)
     prev = _checksum(edges)
     converged = False
     for _ in range(max_iter):
-        edges = _plans.at_rest(_small_star(_large_star(edges)))
+        edges = at_rest(_small_star(_large_star(edges)))
         cur = _checksum(edges)
         if cur == prev:
             converged = True
@@ -1210,14 +1125,12 @@ def dup_span_coverage(
         whitespace_tokens(F.col(text_col)).alias("tk"),
     ).select("id", F.size("tk").alias("n_tokens"), "tk")
 
-    from eurostat_energy_etl_pipeline_spark import plans as _plans
-
     # r14: the gram stream feeds TWO consumers (the duplicated-key
     # aggregate and the join probe) and each replayed the tokenize +
     # shingle + sha2 build from the scan — the r11 exchange-reuse attempt
     # failed on pruning mismatch (BENCHNOTES), but a pin of the hashed,
     # text-free (id, pos, gh) stream shares the build directly.
-    grams = _plans.pin(
+    grams = pin(
         base.where(F.col("n_tokens") >= k)
         .select(
             "id",
@@ -1324,9 +1237,7 @@ def prefix_jaccard_join(
     output. At cluster scale the pins spill MEMORY_AND_DISK and degrade
     to the recompute they replace.
     """
-    from eurostat_energy_etl_pipeline_spark import plans as _plans
-
-    sets = _plans.pin(
+    sets = pin(
         widen_if_narrow(df).select(
             F.col(id_col).alias("id"),
             F.transform(
@@ -1354,7 +1265,7 @@ def prefix_jaccard_join(
             ).alias("order")
         )
     )
-    prefix = _plans.pin(
+    prefix = pin(
         ranked.select(
             "id",
             F.size("order").alias("n"),

@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from eurostat_energy_etl_pipeline_spark.functions.parallelism import widen_if_narrow
-from eurostat_energy_etl_pipeline_spark.plans import staged
+from eurostat_energy_etl_pipeline_spark.plans import pin, scope, staged
 
 
 def _as_double(col: Column) -> Column:
@@ -750,138 +750,134 @@ def merge_into_ivf_index(
         if upserts is not None
         else tomb.limit(0)
     )
-    affected = ups_ids.unionByName(tomb).distinct().persist()
-    idbs = sorted(
-        r["b"]
-        for r in affected.select(
-            F.pmod(F.col("id"), F.lit(nb)).cast("int").alias("b")
-        )
-        .distinct()
-        .collect()
-    )
-    # cells currently holding affected ids: partition-pruned sidecar read
-    old_cells = {
-        r["cell"]
-        for r in spark.read.parquet(f"{path}_ids")
-        .where(F.col("idb").isin(idbs))
-        .join(F.broadcast(affected), "id", "left_semi")
-        .select("cell")
-        .distinct()
-        .collect()
-    }
-
-    eff_ups = None
-    if upserts is not None:
-        eff_ups = (
-            upserts.join(
-                F.broadcast(tomb), upserts[id_col] == tomb["id"], "left_anti"
+    with scope():
+        affected = pin(ups_ids.unionByName(tomb).distinct())
+        idbs = sorted(
+            r["b"]
+            for r in affected.select(
+                F.pmod(F.col("id"), F.lit(nb)).cast("int").alias("b")
             )
-            .select(
-                F.col(id_col),
-                F.col(vec_col),
-                ivf_cell_of(F.col(vec_col), cents).alias("cell"),
-            )
-            .persist()
+            .distinct()
+            .collect()
         )
-        new_cells = {
+        # cells currently holding affected ids: partition-pruned sidecar read
+        old_cells = {
             r["cell"]
-            for r in eff_ups.select("cell").distinct().collect()
-        }
-    else:
-        new_cells = set()
-    touched = sorted(old_cells | new_cells)
-    audit = {
-        "n_tombstones": tomb.count(),
-        "n_upserts": eff_ups.count() if eff_ups is not None else 0,
-        "cells_touched": len(touched),
-        "recentered": [],
-    }
-
-    # rewrite the touched index partitions
-    old = (
-        spark.read.parquet(path)
-        .where(F.col("cell").isin(touched))
-        .select(id_col, vec_col, "cell")
-        .join(
-            F.broadcast(affected),
-            F.col(id_col) == F.col("id"),
-            "left_anti",
-        )
-    )
-    out = old if eff_ups is None else old.unionByName(eff_ups)
-    with staged(out) as out:
-        if recenter_threshold is not None and touched:
-            # post-merge per-cell mean on the integer grid — the
-            # trainer's exact floor((2s+n)/2n) Lloyd update, computed from
-            # O(nlist*dim) aggregated rows, never per-vector driver data
-            stats = (
-                out.select(
-                    "cell",
-                    F.posexplode(grid_int_col(F.col(vec_col))).alias(
-                        "pos", "g"
-                    ),
-                )
-                .groupBy("cell", "pos")
-                .agg(F.sum("g").alias("s"), F.count(F.lit(1)).alias("n"))
-                .collect()
-            )
-            dim = cents.shape[1]
-            sums = {}
-            for r in stats:
-                sums.setdefault(
-                    r["cell"], np.zeros((dim, 2), dtype=np.int64)
-                )[r["pos"]] = (r["s"], r["n"])
-            moved = False
-            for cell, sn in sums.items():
-                n = int(sn[0, 1])
-                if n == 0:
-                    continue
-                mean = np.floor_divide(2 * sn[:, 0] + n, 2 * n)
-                drift = int(((mean - cents[cell]) ** 2).sum())
-                if drift > recenter_threshold:
-                    cents[cell] = mean
-                    audit["recentered"].append(int(cell))
-                    moved = True
-            if moved:
-                rows = pd.DataFrame(
-                    {
-                        "cell": range(len(cents)),
-                        "centroid": [[int(x) for x in c] for c in cents],
-                    }
-                )
-                spark.createDataFrame(
-                    rows, "cell int, centroid array<long>"
-                ).coalesce(1).write.mode("overwrite").parquet(
-                    f"{path}_centroids"
-                )
-
-        out.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("cell").parquet(path)
-        _delete_absent_partitions(out, path, "cell", touched)
-        # sidecar: rewrite the affected id-buckets from the post-merge
-        # membership of the touched cells
-        side_old = (
-            spark.read.parquet(f"{path}_ids")
+            for r in spark.read.parquet(f"{path}_ids")
             .where(F.col("idb").isin(idbs))
-            .join(F.broadcast(affected), "id", "left_anti")
+            .join(F.broadcast(affected), "id", "left_semi")
+            .select("cell")
+            .distinct()
+            .collect()
+        }
+
+        eff_ups = None
+        if upserts is not None:
+            eff_ups = pin(
+                upserts.join(
+                    F.broadcast(tomb), upserts[id_col] == tomb["id"], "left_anti"
+                ).select(
+                    F.col(id_col),
+                    F.col(vec_col),
+                    ivf_cell_of(F.col(vec_col), cents).alias("cell"),
+                )
+            )
+            new_cells = {
+                r["cell"]
+                for r in eff_ups.select("cell").distinct().collect()
+            }
+        else:
+            new_cells = set()
+        touched = sorted(old_cells | new_cells)
+        audit = {
+            "n_tombstones": tomb.count(),
+            "n_upserts": eff_ups.count() if eff_ups is not None else 0,
+            "cells_touched": len(touched),
+            "recentered": [],
+        }
+
+        # rewrite the touched index partitions
+        old = (
+            spark.read.parquet(path)
+            .where(F.col("cell").isin(touched))
+            .select(id_col, vec_col, "cell")
+            .join(
+                F.broadcast(affected),
+                F.col(id_col) == F.col("id"),
+                "left_anti",
+            )
         )
-        side_new = out.select(
-            F.col(id_col).alias("id"),
-            F.col("cell").cast("int").alias("cell"),
-        ).join(F.broadcast(affected), "id", "left_semi")
-        with staged(
-            side_old.select("id", "cell")
-            .unionByName(side_new)
-            .withColumn("idb", F.pmod(F.col("id"), F.lit(nb)).cast("int"))
-        ) as side:
-            side.write.mode("overwrite").option(
+        out = old if eff_ups is None else old.unionByName(eff_ups)
+        with staged(out) as out:
+            if recenter_threshold is not None and touched:
+                # post-merge per-cell mean on the integer grid — the
+                # trainer's exact floor((2s+n)/2n) Lloyd update, computed from
+                # O(nlist*dim) aggregated rows, never per-vector driver data
+                stats = (
+                    out.select(
+                        "cell",
+                        F.posexplode(grid_int_col(F.col(vec_col))).alias(
+                            "pos", "g"
+                        ),
+                    )
+                    .groupBy("cell", "pos")
+                    .agg(F.sum("g").alias("s"), F.count(F.lit(1)).alias("n"))
+                    .collect()
+                )
+                dim = cents.shape[1]
+                sums = {}
+                for r in stats:
+                    sums.setdefault(
+                        r["cell"], np.zeros((dim, 2), dtype=np.int64)
+                    )[r["pos"]] = (r["s"], r["n"])
+                moved = False
+                for cell, sn in sums.items():
+                    n = int(sn[0, 1])
+                    if n == 0:
+                        continue
+                    mean = np.floor_divide(2 * sn[:, 0] + n, 2 * n)
+                    drift = int(((mean - cents[cell]) ** 2).sum())
+                    if drift > recenter_threshold:
+                        cents[cell] = mean
+                        audit["recentered"].append(int(cell))
+                        moved = True
+                if moved:
+                    rows = pd.DataFrame(
+                        {
+                            "cell": range(len(cents)),
+                            "centroid": [[int(x) for x in c] for c in cents],
+                        }
+                    )
+                    spark.createDataFrame(
+                        rows, "cell int, centroid array<long>"
+                    ).coalesce(1).write.mode("overwrite").parquet(
+                        f"{path}_centroids"
+                    )
+
+            out.write.mode("overwrite").option(
                 "partitionOverwriteMode", "dynamic"
-            ).partitionBy("idb").parquet(f"{path}_ids")
-            _delete_absent_partitions(side, f"{path}_ids", "idb", idbs)
-    if eff_ups is not None:
-        eff_ups.unpersist()
-    affected.unpersist()
+            ).partitionBy("cell").parquet(path)
+            _delete_absent_partitions(out, path, "cell", touched)
+            # sidecar: rewrite the affected id-buckets from the post-merge
+            # membership of the touched cells
+            side_old = (
+                spark.read.parquet(f"{path}_ids")
+                .where(F.col("idb").isin(idbs))
+                .join(F.broadcast(affected), "id", "left_anti")
+            )
+            side_new = out.select(
+                F.col(id_col).alias("id"),
+                F.col("cell").cast("int").alias("cell"),
+            ).join(F.broadcast(affected), "id", "left_semi")
+            with staged(
+                side_old.select("id", "cell")
+                .unionByName(side_new)
+                .withColumn("idb", F.pmod(F.col("id"), F.lit(nb)).cast("int"))
+            ) as side:
+                side.write.mode("overwrite").option(
+                    "partitionOverwriteMode", "dynamic"
+                ).partitionBy("idb").parquet(f"{path}_ids")
+                _delete_absent_partitions(side, f"{path}_ids", "idb", idbs)
     return audit
 
 

@@ -39,27 +39,82 @@ ORACLE: dict[str, str] = {}
 # (bench.py) raise SPARK_GRAFT_PLAN_CACHE_SIZE above the registry size
 # to keep full reuse — exactly a real engine's sized prepared-statement
 # cache.
-_PLAN_CACHE: OrderedDict[tuple[str, str, str], DataFrame] = OrderedDict()
+
+
+class _Plan:
+    """One plan scope, and the plan cache's entry: the built DataFrame
+    (set once it is cached), the DataFrames its build pinned, and the RDD
+    ids of its at-rest checkpoints. Removing an entry releases its pins,
+    so no registry outlives the plan it describes."""
+
+    __slots__ = ("df", "pins", "checkpoints")
+
+    def __init__(self) -> None:
+        self.df: DataFrame | None = None
+        self.pins: list[DataFrame] = []
+        self.checkpoints: set[int] = set()
+
+
+_PLAN_CACHE: OrderedDict[tuple[str, str, str], _Plan] = OrderedDict()
 # bench's throughput pass hits the cache from 8 client threads; OrderedDict
-# reordering is not atomic, so every cache touch takes this (uncontended,
-# nanoseconds next to a 200 ms plan build)
-_PLAN_CACHE_LOCK = threading.Lock()
+# reordering is not atomic, so every touch of the cache or of a record
+# takes this (uncontended, nanoseconds next to a 200 ms plan build)
+_LOCK = threading.Lock()
+# pins made outside any scope (direct operator calls); release_pins()
+# with no name releases them
+_UNSCOPED = _Plan()
+
+
+class _Building(threading.local):
+    """Per-thread stack of the scope records being built: bench.py's
+    threaded throughput pass builds plans concurrently, and a shared stack
+    would let one thread's pin register in another thread's plan.
+    Thread-local keeps attribution exact with no locking on the hot
+    path."""
+
+    def __init__(self) -> None:
+        self.stack: list[_Plan] = []
+
+
+_BUILDING = _Building()
 
 
 def _plan_cache_cap() -> int:
     return int(os.environ.get("SPARK_GRAFT_PLAN_CACHE_SIZE", "32"))
 
 
+def _release(plans: list[_Plan], blocking: bool = False) -> int:
+    """Unpersist the pins of ``plans``; returns how many were released.
+    Re-executing a plan afterwards is still correct — it just recomputes
+    the subtree."""
+    with _LOCK:
+        handles = [df for p in plans for df in p.pins]
+        for p in plans:
+            p.pins = []
+    n = 0
+    for df in handles:
+        try:
+            df.unpersist(blocking)
+            n += 1
+        except Exception:
+            pass  # session already stopped; nothing to release
+    return n
+
+
 def clear_plan_cache() -> None:
-    """Drop memoized plans. Needed when a test wants the pre-execution plan:
-    once a cached DataFrame has been executed, ``explain`` shows the
-    AQE-finalized physical plan, not the static one."""
-    with _PLAN_CACHE_LOCK:
+    """Drop memoized plans and release their pins. Needed when a test
+    wants the pre-execution plan: once a cached DataFrame has been
+    executed, ``explain`` shows the AQE-finalized physical plan, not the
+    static one."""
+    with _LOCK:
+        dropped = list(_PLAN_CACHE.values())
         _PLAN_CACHE.clear()
+    _release(dropped)
 
 
 def drop_plan(name: str) -> int:
-    """Evict ``name``'s memoized plans (every session/sf_dir key).
+    """Evict ``name``'s memoized plans (every session/sf_dir key) and
+    release their pins.
 
     A ONE-SHOT harness (the driver's correctness sweep runs each query
     exactly once) should not retain executed plans: each kept DataFrame
@@ -73,60 +128,43 @@ def drop_plan(name: str) -> int:
     lifetime caches (catalog cached_view, prepared graphs, at-rest
     index memos) are deliberately untouched — they are the bounded,
     intended long-lived state."""
-    with _PLAN_CACHE_LOCK:
+    with _LOCK:
         keys = [k for k in _PLAN_CACHE if k[2] == name]
-        for k in keys:
-            del _PLAN_CACHE[k]
-    # the plan is gone, so its plan-lifetime checkpoint declaration no
-    # longer describes anything live (ADVICE r13: don't let stale entries
-    # keep the lifetime gate lenient forever)
-    with _PINNED_LOCK:
-        _CHECKPOINT_USERS.pop(name, None)
-    return len(keys)
+        dropped = [_PLAN_CACHE.pop(k) for k in keys]
+    _release(dropped)
+    return len(dropped)
 
 
-# Persisted-intermediate registry (VERDICT r9 item 4): plans that persist
-# a shared subtree register the handle under the query being built, so the
-# harness (bench.py between measurements, tests) can return the session's
-# cached-block footprint to baseline instead of accumulating dozens of
-# pinned RDDs across a 163-query run. graph.py's iterative pins manage
-# their own lifetime internally and don't use this.
-_PINNED: dict[str, list[DataFrame]] = {}
-_PINNED_LOCK = threading.Lock()
-
-
-class _Building(threading.local):
-    """Per-thread query-name stack: bench.py's threaded throughput pass
-    builds plans concurrently (e.g. after clear_plan_cache), and a shared
-    stack would let one thread's pin register under another thread's
-    query name. thread-local keeps attribution exact with no locking on
-    the hot path."""
-
-    def __init__(self) -> None:
-        self.stack: list[str] = []
-
-
-_BUILDING = _Building()
+@contextmanager
+def scope():
+    """Open a plan scope on this thread and yield its record: `pin` and
+    `at_rest` calls inside register into it. `query` keeps the record of
+    a plan it caches; every other record has its pins released on exit
+    (a per-batch or per-operation scope, a failed build, or the loser of
+    two concurrent builds of one plan)."""
+    rec = _Plan()
+    stack = _BUILDING.stack
+    stack.append(rec)
+    try:
+        yield rec
+    finally:
+        stack.pop()
+        if rec.df is None:
+            _release([rec])
 
 
 def pin(df: DataFrame) -> DataFrame:
-    """persist() + register the handle for :func:`release_pins`. Use for
-    an expensive subtree referenced more than once in the SAME returned
-    plan; the pin stays alive while the query is measured and is released
-    by the harness afterwards (re-executing the memoized plan after a
-    release is still correct — just recomputes the subtree)."""
+    """persist() ``df`` for the life of the current scope. Use for an
+    expensive subtree referenced more than once in the SAME returned plan
+    (or operation): the pin stays alive while the cached plan is
+    measured, and is released when the plan leaves the cache or by
+    :func:`release_pins`."""
     stack = _BUILDING.stack
-    name = stack[-1] if stack else "__anon__"
-    with _PINNED_LOCK:
-        _PINNED.setdefault(name, []).append(df.persist())
+    rec = stack[-1] if stack else _UNSCOPED
+    df.persist()
+    with _LOCK:
+        rec.pins.append(df)
     return df
-
-
-# name -> the plan-lifetime checkpoint RDD ids of the query's CURRENT
-# build. Reset per build (the `query` wrapper pops the entry on every
-# plan-cache miss) so the registry reflects the plan as built NOW, not
-# historical builds (ADVICE r13).
-_CHECKPOINT_USERS: dict[str, set[int]] = {}
 
 
 def _checkpoint_rdd(df: DataFrame):
@@ -146,16 +184,18 @@ def at_rest(df: DataFrame) -> DataFrame:
     re-optimized on EVERY action); leaf RDDs keep the returned plan
     proportional to the merge logic itself.
 
-    Blocks are plan-lifetime (released when the plan is dropped and
-    GC'd): the checkpoint's RDD id, read off the returned DataFrame, is
-    registered under the query being built (thread-local build stack),
-    so lifetime gates can tell these blocks from a pin() leak."""
+    Blocks are plan-lifetime: they are never released explicitly (a
+    caller may still hold the DataFrame, and checkpoint blocks cannot be
+    recomputed), so they go when the plan is dropped and GC'd. The
+    checkpoint's RDD id, read off the returned DataFrame, is recorded in
+    the scope being built, so lifetime gates can tell these blocks from a
+    pin() leak."""
     out = df.localCheckpoint(eager=True)
-    rdd_id = _checkpoint_rdd(out).id()
     stack = _BUILDING.stack
-    name = stack[-1] if stack else "__anon__"
-    with _PINNED_LOCK:
-        _CHECKPOINT_USERS.setdefault(name, set()).add(rdd_id)
+    if stack:
+        rdd_id = _checkpoint_rdd(out).id()
+        with _LOCK:
+            stack[-1].checkpoints.add(rdd_id)
     return out
 
 
@@ -174,37 +214,34 @@ def staged(df: DataFrame):
 
 
 def checkpoint_users() -> frozenset[str]:
-    """Queries that self-declared plan-lifetime checkpoint blocks (only
-    populated for plans BUILT in this session — build before asking)."""
-    with _PINNED_LOCK:
-        return frozenset(_CHECKPOINT_USERS)
+    """Cached plans that declared plan-lifetime checkpoint blocks (build
+    before asking)."""
+    with _LOCK:
+        return frozenset(k[2] for k, p in _PLAN_CACHE.items() if p.checkpoints)
 
 
 def checkpoint_ids(name: str) -> frozenset[int] | None:
-    """The plan-lifetime block ids `name`'s current build declared, or
-    None when it declared none."""
-    with _PINNED_LOCK:
-        ids = _CHECKPOINT_USERS.get(name)
-        return None if ids is None else frozenset(ids)
+    """The plan-lifetime block ids `name`'s cached plans declared, or
+    None when they declared none."""
+    with _LOCK:
+        ids = frozenset().union(
+            *(p.checkpoints for k, p in _PLAN_CACHE.items() if k[2] == name)
+        )
+    return ids or None
 
 
 def release_pins(name: str | None = None, blocking: bool = False) -> int:
-    """Unpersist every handle pinned by `name` (or by all queries when
-    None). Returns the number of handles released. ``blocking=False``
-    (the default) is the harness hot path; the count-based lifetime test
-    passes ``blocking=True`` because an async unpersist can land AFTER a
-    later baseline snapshot and deflate it mid-measurement."""
-    with _PINNED_LOCK:
-        names = [name] if name is not None else list(_PINNED)
-        handles = [df for q in names for df in _PINNED.pop(q, [])]
-    n = 0
-    for df in handles:
-        try:
-            df.unpersist(blocking)
-            n += 1
-        except Exception:
-            pass
-    return n
+    """Unpersist every handle pinned by `name`'s cached plans (or by all
+    plans and unscoped calls when None); the plans stay cached. Returns
+    the number of handles released. ``blocking=False`` (the default) is
+    the harness hot path; the count-based lifetime test passes
+    ``blocking=True`` because an async unpersist can land AFTER a later
+    baseline snapshot and deflate it mid-measurement."""
+    with _LOCK:
+        plans = [p for k, p in _PLAN_CACHE.items() if name in (None, k[2])]
+    if name is None:
+        plans.append(_UNSCOPED)
+    return _release(plans, blocking)
 
 
 def query(name: str, oracle: str | None = None):
@@ -215,26 +252,33 @@ def query(name: str, oracle: str | None = None):
     def deco(fn):
         def prepared(spark: SparkSession, sf_dir: str) -> DataFrame:
             key = (spark.sparkContext.applicationId, sf_dir, name)
-            with _PLAN_CACHE_LOCK:
-                df = _PLAN_CACHE.get(key)
-                if df is not None:
+            with _LOCK:
+                hit = _PLAN_CACHE.get(key)
+                if hit is not None:
                     _PLAN_CACHE.move_to_end(key)
-                    return df
-            # fresh build: reset the query's checkpoint declaration so the
-            # registry reflects THIS plan (a refactor that drops checkpoint
-            # usage stops being grandfathered in — ADVICE r13)
-            with _PINNED_LOCK:
-                _CHECKPOINT_USERS.pop(name, None)
-            _BUILDING.stack.append(name)
-            try:
+                    return hit.df
+            with scope() as rec:
                 df = fn(spark, sf_dir)
-            finally:
-                _BUILDING.stack.pop()
-            with _PLAN_CACHE_LOCK:
-                _PLAN_CACHE[key] = df
-                cap = _plan_cache_cap()
-                while len(_PLAN_CACHE) > cap:
-                    _PLAN_CACHE.popitem(last=False)  # LRU eviction
+                with _LOCK:
+                    # a concurrent build of the same key may have won;
+                    # this record then leaves the scope unset and released
+                    cached = _PLAN_CACHE.setdefault(key, rec)
+                    if cached is rec:
+                        rec.df = df
+                    _PLAN_CACHE.move_to_end(key)
+                    over = len(_PLAN_CACHE) - _plan_cache_cap()
+                    evicted = [
+                        _PLAN_CACHE.popitem(last=False)[1] for _ in range(over)
+                    ]
+                if cached is not rec:
+                    # Spark keeps one cache entry per plan: unpersisting a
+                    # pin the winner also holds would unpin the winner
+                    rec.pins = [
+                        p for p in rec.pins
+                        if not any(p.sameSemantics(w) for w in cached.pins)
+                    ]
+                df = cached.df
+            _release(evicted)
             return df
 
         prepared.__name__ = f"{fn.__name__}_prepared"

@@ -361,12 +361,12 @@ def count_triangles(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
     three hash equi-joins (orient, wedge-close, triangle-close); every
     shuffle is keyed by node or node-pair (AQE skew-split-able), nothing
     is collected. Both the raw edge list and the oriented edge table are
-    cached: the census reads edges three ways (degree rollup, edge count,
+    pinned (plan lifetime): the census reads edges three ways (degree rollup, edge count,
     orientation) and oriented three ways (both wedge sides + the closing
     probe), so without the pins the upstream edge DERIVATION — the
     expensive part at any scale — would re-execute per consumer.
     """
-    edges = edges.cache()
+    edges = plans.pin(edges)
     deg = (
         edges.select(F.col(a).alias("n"))
         .unionAll(edges.select(F.col(b).alias("n")))
@@ -377,14 +377,13 @@ def count_triangles(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
     lower_first = (F.col("da.d") < F.col("db.d")) | (
         (F.col("da.d") == F.col("db.d")) & (F.col(a) < F.col(b))
     )
-    oriented = (
+    oriented = plans.pin(
         edges.join(da, F.col(a) == F.col("da.n"))
         .join(db_, F.col(b) == F.col("db.n"))
         .select(
             F.when(lower_first, F.col(a)).otherwise(F.col(b)).alias("s"),
             F.when(lower_first, F.col(b)).otherwise(F.col(a)).alias("t"),
         )
-        .cache()
     )
     e1, e2, e3 = oriented.alias("e1"), oriented.alias("e2"), oriented.alias("e3")
     wedges = e1.join(e2, F.col("e1.t") == F.col("e2.s")).select(

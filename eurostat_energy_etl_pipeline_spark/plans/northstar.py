@@ -1577,14 +1577,12 @@ def q108(spark, sf_dir):
         ).collect()[0]
     )
     nf = float(n)
-    base = (
-        widen_if_narrow(li)
-        .select(
+    base = pin(
+        widen_if_narrow(li).select(
             (F.col("l_quantity") / F.lit(float(qm))).alias("xq"),
             F.col("l_discount").alias("xd"),
             (F.col("l_extendedprice") / F.lit(float(ym))).alias("y"),
         )
-        .cache()
     )
 
     def _g12(c):

@@ -406,23 +406,29 @@ def screen_stream_per_batch(
     aggregate/join run as ordinary batch plans inside the batch function,
     sidestepping both the unwatermarked-state growth of the always-on
     shared-band count and streaming's single-stateful-operator rule (the
-    exact-Jaccard verify join would otherwise be unreachable). Returns the
-    started StreamingQuery (caller owns the lifecycle)."""
+    exact-Jaccard verify join would otherwise be unreachable). Each batch
+    runs in its own plan scope, so the batch's pinned signature table is
+    released once `sink` returns. Returns the started StreamingQuery
+    (caller owns the lifecycle)."""
     from eurostat_energy_etl_pipeline_spark.operators.dedup import (
         match_against_index,
     )
+    from eurostat_energy_etl_pipeline_spark.plans import scope
 
     def run_batch(batch_df: DataFrame, batch_id: int) -> None:
-        matches = match_against_index(
-            spark,
-            batch_df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")),
-            index_path,
-            num_hashes=num_hashes,
-            bands=bands,
-            shingle_k=shingle_k,
-            threshold=threshold,
-        )
-        sink(matches, batch_id)
+        with scope():
+            matches = match_against_index(
+                spark,
+                batch_df.select(
+                    F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
+                ),
+                index_path,
+                num_hashes=num_hashes,
+                bands=bands,
+                shingle_k=shingle_k,
+                threshold=threshold,
+            )
+            sink(matches, batch_id)
 
     return docs_stream.writeStream.foreachBatch(run_batch).start()
 

@@ -158,12 +158,10 @@ def main() -> int:
     for name, fn in queries.items():
         try:
             sdf = fn(spark, sf_dir).toPandas()
-            # one-shot harness: return the cached-block footprint to
-            # baseline after each query (the r10 pin/release contract),
-            # and evict the memoized plan so its executed broadcasts /
-            # checkpoint RDDs become GC-able — retaining all 200+ plans
-            # overflowed the 1g plain-session heap at sf0.1 (r12).
-            plans_mod.release_pins(name)
+            # one-shot harness: evict the memoized plan, which releases
+            # its pins and lets its executed broadcasts / checkpoint RDDs
+            # be GC'd — retaining all 200+ plans overflowed the 1g
+            # plain-session heap at sf0.1 (r12).
             plans_mod.drop_plan(name)
             sql = oracles.get(name)
             if sql is None:

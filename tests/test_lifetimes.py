@@ -1,6 +1,7 @@
-"""Lifetime mechanisms, one per scope: plan-lifetime checkpoints
-(`plans.at_rest`), session-lifetime memos (`catalog.session_memo`) and
-operation-lifetime staging (`plans.staged`)."""
+"""Lifetime mechanisms, one per scope: plan records (the plan cache entry
+owns its `plans.pin` handles and `plans.at_rest` checkpoint ids),
+session-lifetime memos (`catalog.session_memo`) and operation-lifetime
+staging (`plans.staged`)."""
 
 import os
 import re
@@ -9,6 +10,8 @@ import sys
 import threading
 import time
 from pathlib import Path
+
+import pytest
 
 PKG = Path(__file__).resolve().parents[1] / "eurostat_energy_etl_pipeline_spark"
 
@@ -33,7 +36,10 @@ def test_at_rest_registers_exactly_its_own_checkpoint(spark, monkeypatch):
 
     monkeypatch.setattr(cls, "localCheckpoint", racing)
     name = "__at_rest_race_probe__"
-    P._BUILDING.stack.append(name)
+    rec = P._Plan()
+    with P._LOCK:
+        P._PLAN_CACHE[(spark.sparkContext.applicationId, "/probe", name)] = rec
+    P._BUILDING.stack.append(rec)
     try:
         out = P.at_rest(spark.range(10))
     finally:
@@ -44,9 +50,198 @@ def test_at_rest_registers_exactly_its_own_checkpoint(spark, monkeypatch):
         assert P.checkpoint_ids(name) == frozenset({own})
         assert name in P.checkpoint_users()
     finally:
-        P._CHECKPOINT_USERS.pop(name, None)
+        P.drop_plan(name)
         for df in (out, *foreign):
             df._jdf.queryExecution().logical().rdd().unpersist(True)
+
+
+def test_plan_cache_lru_bounded_and_droppable(spark, sf_dir, monkeypatch):
+    """The plan memo is a bounded LRU by default (one-shot sweeps get no
+    reuse, so retention is pure heap cost): exceeding the cap evicts the
+    oldest entry, hits refresh recency, and drop_plan removes a query's
+    entries explicitly (the driver_sim one-shot contract)."""
+    from eurostat_energy_etl_pipeline_spark import plans as P
+
+    monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE_SIZE", "2")
+    P.clear_plan_cache()
+    import __spark_entry__ as m
+
+    qs = m.queries()
+    sf = sf_dir
+    qs["q01_filter_project"](spark, sf)
+    qs["q02_in_list"](spark, sf)
+    assert len(P._PLAN_CACHE) == 2
+    # hit q01 (refresh recency), then add a third: q02 must evict
+    qs["q01_filter_project"](spark, sf)
+    qs["q03_distinct_notnull"](spark, sf)
+    names = {k[2] for k in P._PLAN_CACHE}
+    assert names == {"q01_filter_project", "q03_distinct_notnull"}
+    assert P.drop_plan("q01_filter_project") == 1
+    assert {k[2] for k in P._PLAN_CACHE} == {"q03_distinct_notnull"}
+    P.clear_plan_cache()
+
+
+# pins shared subtrees and takes no at-rest checkpoint
+PIN_QUERY = "q154_column_profile"
+
+
+def _evict_with_two_newer_plans(qs, spark, sf_dir):
+    """Under a plan-cache cap of 2, two newer plans push out every other."""
+    qs["q01_filter_project"](spark, sf_dir)
+    qs["q02_in_list"](spark, sf_dir)
+
+
+def test_evicted_and_dropped_plans_release_their_pins(spark, sf_dir, monkeypatch):
+    """A plan leaving the cache, by the LRU cap or by drop_plan, frees the
+    blocks its build pinned."""
+    import __spark_entry__ as m
+
+    from eurostat_energy_etl_pipeline_spark import plans as P
+
+    qs = m.queries()
+
+    def blocks_of_one_run():
+        before = _persistent_rdd_ids(spark)
+        qs[PIN_QUERY](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        added = _persistent_rdd_ids(spark) - before
+        assert added
+        return added
+
+    # warm run: session views the query reads exist before any snapshot
+    P.clear_plan_cache()
+    blocks_of_one_run()
+    P.clear_plan_cache()
+    P.release_pins(blocking=True)
+    monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE_SIZE", "2")
+
+    added = blocks_of_one_run()
+    _evict_with_two_newer_plans(qs, spark, sf_dir)
+    assert PIN_QUERY not in {k[2] for k in P._PLAN_CACHE}
+    assert _persistent_rdd_ids(spark) & added == set()
+
+    added = blocks_of_one_run()
+    assert P.drop_plan(PIN_QUERY) == 1
+    assert _persistent_rdd_ids(spark) & added == set()
+    P.clear_plan_cache()
+
+
+def test_rebuilds_after_eviction_hold_one_pin_set(spark, sf_dir, monkeypatch):
+    """Evicting and rebuilding a plan three times leaves the pins of one
+    build registered, not of every build."""
+    import __spark_entry__ as m
+
+    from eurostat_energy_etl_pipeline_spark import plans as P
+
+    qs = m.queries()
+    P.clear_plan_cache()
+    qs[PIN_QUERY](spark, sf_dir)
+    one_build = P.release_pins(PIN_QUERY)
+    assert one_build >= 1
+
+    monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE_SIZE", "2")
+    P.clear_plan_cache()
+    qs[PIN_QUERY](spark, sf_dir)
+    for _ in range(3):
+        _evict_with_two_newer_plans(qs, spark, sf_dir)
+        qs[PIN_QUERY](spark, sf_dir)
+    assert P.release_pins(PIN_QUERY) == one_build
+    P.clear_plan_cache()
+
+
+def test_concurrent_builds_of_one_plan_keep_one_record(spark, sf_dir):
+    """More clients than cores miss one plan together: each builds, one
+    record is cached, every client gets its plan, and the losing builds'
+    pins are released without unpinning the cached plan's."""
+    import __spark_entry__ as m
+
+    from eurostat_energy_etl_pipeline_spark import plans as P
+
+    qs = m.queries()
+    P.clear_plan_cache()
+    qs[PIN_QUERY](spark, sf_dir)
+    one_build = P.release_pins(PIN_QUERY)
+    P.clear_plan_cache()
+
+    n_clients = 8
+    start = threading.Barrier(n_clients)
+    got = []
+
+    def client():
+        start.wait(timeout=60)
+        got.append(qs[PIN_QUERY](spark, sf_dir))
+
+    threads = [threading.Thread(target=client) for _ in range(n_clients)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert len(got) == n_clients and all(df is got[0] for df in got)
+    assert [k[2] for k in P._PLAN_CACHE] == [PIN_QUERY]
+    # the losers' release left the cached plan's own pins in place
+    before = _persistent_rdd_ids(spark)
+    got[0].write.format("noop").mode("overwrite").save()
+    assert _persistent_rdd_ids(spark) - before
+    assert P.release_pins(PIN_QUERY) == one_build
+    P.clear_plan_cache()
+
+
+def test_checkpoint_users_forget_cleared_plans(spark, sf_dir):
+    import __spark_entry__ as m
+
+    from eurostat_energy_etl_pipeline_spark import plans as P
+
+    name = "q189_khop_reach"  # its BFS levels are at-rest checkpoints
+    P.clear_plan_cache()
+    m.queries()[name](spark, sf_dir)
+    assert name in P.checkpoint_users()
+    P.clear_plan_cache()
+    assert name not in P.checkpoint_users()
+    assert P.checkpoint_ids(name) is None
+
+
+def test_index_merges_release_their_pins_when_the_write_fails(
+    spark, tmp_path, monkeypatch
+):
+    """Both at-rest index merges pin the batch's ids and signatures; a
+    failing write must not leave them persisted."""
+    from eurostat_energy_etl_pipeline_spark.operators import dedup as D
+    from eurostat_energy_etl_pipeline_spark.operators import similarity as S
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta gamma delta token_{i}") for i in range(12)],
+        "doc_id long, text string",
+    )
+    vecs = spark.createDataFrame(
+        [(i, [float(i), 1.0, float(i % 3)]) for i in range(12)],
+        "vec_id long, embedding array<double>",
+    )
+    mh, ivf = str(tmp_path / "minhash"), str(tmp_path / "ivf")
+    D.write_minhash_index(docs, mh, num_buckets=4)
+    S.write_ivf_index(vecs, ivf, nlist=2)
+
+    def failing_write(self, *args, **kwargs):
+        raise RuntimeError("write failed")
+
+    monkeypatch.setattr(type(docs.write), "parquet", failing_write)
+    merges = (
+        lambda: D.merge_into_minhash_index(
+            spark, mh, upserts=docs.where("doc_id < 3"), tombstone_ids=[5]
+        ),
+        lambda: S.merge_into_ivf_index(
+            spark, ivf, upserts=vecs.where("vec_id < 3"), tombstone_ids=[5]
+        ),
+    )
+    for merge in merges:
+        before = _persistent_rdd_ids(spark)
+        with pytest.raises(RuntimeError, match="write failed"):
+            merge()
+        assert _persistent_rdd_ids(spark) - before == set()
 
 
 def test_staged_releases_its_blocks_on_exit(spark):
@@ -164,3 +359,27 @@ def test_checkpoints_and_overwrite_mode_have_one_home():
         if f != home:
             assert ".localCheckpoint(" not in src, f
         assert not conf_set.search(src), f
+
+
+# Modules that may still `.persist(` / `.cache()` outside `plans.pin` and
+# `catalog`, with the reason each owns its own lifetime.
+PERSIST_OWNERS = {
+    "plans/graph.py": "prepare_graph: the caller owns the pinned graph state",
+    "rag/bm25.py": "rag index: built once per session memo",
+    "rag/tfidf.py": "rag index: built once per session memo",
+    "operators/bpe.py": "rolling re-persist of the merge table, try/finally",
+}
+
+
+def test_persist_has_one_home():
+    """Regrowth guard: plan- and operation-lifetime persists go through
+    `plans.pin` (inside `plans.scope` for an operation), session ones
+    through `catalog`; the allowlist holds only the remaining owners."""
+    persist = re.compile(r"\.persist\(|\.cache\(\)")
+    homes = {PKG / "plans" / "__init__.py", PKG / "catalog.py"}
+    found = {
+        f.relative_to(PKG).as_posix()
+        for f in PKG.rglob("*.py")
+        if f not in homes and persist.search(f.read_text())
+    }
+    assert found == set(PERSIST_OWNERS)

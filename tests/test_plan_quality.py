@@ -838,6 +838,10 @@ def test_pinned_intermediates_release_to_baseline(spark, queries):
         "q195_incremental_media",
         "q198_incremental_containment",
         "q199_multitick_media",
+        "q25_minhash_lsh_pairs",
+        "q26_simhash_pairs",
+        "q105_triangle_count",
+        "q108_linear_gd",
     ]
     sc = spark.sparkContext
 

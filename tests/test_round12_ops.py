@@ -471,29 +471,3 @@ def test_q191_backtest_hits_planted_copurchase(spark, tmp_path):
         int(ora.n_baskets.iloc[0]), int(ora.cf_hits.iloc[0]),
         int(ora.pop_hits.iloc[0]),
     ) == (6, 3, 3)
-
-
-def test_plan_cache_lru_bounded_and_droppable(spark, monkeypatch):
-    """The plan memo is a bounded LRU by default (one-shot sweeps get no
-    reuse, so retention is pure heap cost): exceeding the cap evicts the
-    oldest entry, hits refresh recency, and drop_plan removes a query's
-    entries explicitly (the driver_sim one-shot contract)."""
-    from eurostat_energy_etl_pipeline_spark import plans as P
-
-    monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE_SIZE", "2")
-    P.clear_plan_cache()
-    import __spark_entry__ as m
-
-    qs = m.queries()
-    sf = "/root/testdata/sf0.001"
-    qs["q01_filter_project"](spark, sf)
-    qs["q02_in_list"](spark, sf)
-    assert len(P._PLAN_CACHE) == 2
-    # hit q01 (refresh recency), then add a third: q02 must evict
-    qs["q01_filter_project"](spark, sf)
-    qs["q03_distinct_notnull"](spark, sf)
-    names = {k[2] for k in P._PLAN_CACHE}
-    assert names == {"q01_filter_project", "q03_distinct_notnull"}
-    assert P.drop_plan("q01_filter_project") == 1
-    assert {k[2] for k in P._PLAN_CACHE} == {"q03_distinct_notnull"}
-    P.clear_plan_cache()

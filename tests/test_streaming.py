@@ -271,11 +271,14 @@ def test_screen_stream_per_batch_matches_batch_matcher(spark, sf_dir, tmp_path):
     def sink(matches, batch_id):
         collected.append(matches.toPandas())
 
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persistent().keySet().toArray())
     q = screen_stream_per_batch(stream, spark, idx, sink)
     try:
         q.processAllAvailable()
     finally:
         q.stop()
+    assert set(persistent().keySet().toArray()) - before == set()
     import pandas as pd
 
     got = (

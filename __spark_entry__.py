@@ -10,12 +10,13 @@ rows-only by the driver and semantically by `tests/`.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from eurostat_energy_etl_pipeline_spark import plans
 from eurostat_energy_etl_pipeline_spark.plans import ORACLE, QUERIES

@@ -43,7 +43,7 @@ def indicator_display_name(code: Column) -> Column:
     mapping = F.create_map(
         *[F.lit(x) for kv in INDICATOR_NAMES.items() for x in kv]
     )
-    return F.coalesce(mapping.getItem(code), code)
+    return F.coalesce(mapping[code], code)
 
 
 def insight_text(

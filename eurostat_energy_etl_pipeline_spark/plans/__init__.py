@@ -205,7 +205,9 @@ def staged(df: DataFrame):
     with its lineage cut, and releases the blocks on exit. For operations
     that stage rows and then overwrite their own input (merge,
     compaction, index maintenance): the write never reads the files it is
-    replacing, and no staging blocks outlive the call."""
+    replacing. For a batch one operation reads more than once (a load's
+    write, merge lookups and row count): the batch's plan runs once. No
+    staging blocks outlive the call."""
     out = df.localCheckpoint(eager=True)
     try:
         yield out

@@ -7,9 +7,14 @@ unraveling, label resolution, allow-list filtering — is a Spark plan over the
 (flat_index, value) pairs:
 
 - unravel: integer div/mod per dimension (pure arithmetic, codegen);
-- label resolution (S4): `create_map` literals for the tiny per-dim label
-  dicts — constant-folded broadcast lookup, no join needed;
+- label resolution (S4): the header's position -> code and position ->
+  label tables (label fallback included) are resolved on the driver into
+  one array literal each, looked up by position with `get` — O(1), no
+  join, no per-entry literal;
 - indicator allow-list (P8/J2): `isin` semi-join semantics.
+
+The whole decode is one `where` + `select`, so building the plan costs a
+few py4j calls per dimension, not one per category.
 
 The HTTP fetch itself (S1) stays driver-side by design: the payload is tiny
 and the decode is where the data-parallel work is. `fetch_jsonstat` is the
@@ -19,14 +24,18 @@ against the frozen fixture (FIXTURES.md §3.1).
 
 from __future__ import annotations
 
+import json
 import math
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    ArrayType,
+    DateType,
     DoubleType,
     LongType,
+    StringType,
     StructField,
     StructType,
 )
@@ -81,6 +90,24 @@ def _codes_by_position(payload: dict[str, Any], dim: str) -> dict[int, str]:
     return {pos: code for code, pos in index.items()}
 
 
+def _position_arrays(payload: dict[str, Any], dim: str, size: int):
+    """Position -> code and position -> label for one dimension, as two
+    array literals. Labels fall back to the code (etl/main.py:118); a
+    position absent from the index resolves to null. Each array is one
+    JSON string through `from_json`, which Catalyst folds to a literal:
+    one py4j call per array instead of one `lit` per entry, with quotes,
+    backslashes, control characters and nulls escaped by `json`."""
+    by_pos = _codes_by_position(payload, dim)
+    labels = payload["dimension"][dim]["category"].get("label") or {}
+    codes = [by_pos.get(pos) for pos in range(size)]
+    names = [code if labels.get(code) is None else labels[code] for code in codes]
+    as_array = ArrayType(StringType())
+    return (
+        F.from_json(F.lit(json.dumps(codes)), as_array),
+        F.from_json(F.lit(json.dumps(names)), as_array),
+    )
+
+
 def decode_jsonstat(
     spark: SparkSession,
     payload: dict[str, Any],
@@ -89,17 +116,23 @@ def decode_jsonstat(
 ) -> DataFrame:
     """Decode a JSON-stat dense cube into observation rows.
 
-    Returns an empty DataFrame with the declared schema when the payload
-    fails validation (S2's empty-result contract)."""
+    One `where` + `select` over the (flat_idx, value) cells: each used
+    dimension's position is unravelled with integer arithmetic and looked
+    up in its code and label arrays with `get` (O(1), null out of range),
+    and the indicator allow-list filters the looked-up code. Returns an empty DataFrame with the declared schema when the
+    payload fails validation or lacks an indicator, geo or time dimension
+    (S2's empty-result contract)."""
+    if not validate(payload):
+        return spark.createDataFrame([], _out_schema())
+    dims: list[str] = payload["id"]
+    sizes: list[int] = payload["size"]
+    ind_dim = find_indicator_dim(payload, indicators)
+    if ind_dim is None or "geo" not in dims or "time" not in dims:
+        return spark.createDataFrame([], _out_schema())
+
     schema = StructType(
         [StructField("flat_idx", LongType()), StructField("value", DoubleType())]
     )
-    empty_out = spark.createDataFrame([], _out_schema())
-    if not validate(payload):
-        return empty_out
-
-    dims: list[str] = payload["id"]
-    sizes: list[int] = payload["size"]
     data = [(int(k), float(v)) for k, v in payload["value"].items()]
     # Size the Python-side slice count to the data, not defaultParallelism:
     # a plain createDataFrame pickles the rows into one RDD partition PER
@@ -112,65 +145,38 @@ def decode_jsonstat(
         spark.sparkContext.parallelize(data, n_slices), schema
     )
 
-    # Row-major unravel, last dim fastest (/root/reference/etl/main.py:97-102):
-    # coord_d = (flat_idx // prod(sizes[d+1:])) % sizes[d]
-    out = cells
-    for d, dim in enumerate(dims):
-        stride = math.prod(sizes[d + 1 :])
-        # Integer `div`, matching the pure-Python kernel's `//` exactly —
-        # double division loses exactness for flat_idx above 2^53.
-        coord = F.expr(f"flat_idx div {stride}") % sizes[d]
-        codes = _codes_by_position(payload, dim)
-        labels = payload["dimension"][dim]["category"].get("label", {})
-        code_map = F.create_map(
-            *[x for pos, code in codes.items() for x in (F.lit(pos), F.lit(code))]
-        )
-        code_col = code_map.getItem(coord)
-        out = out.withColumn(f"__code_{dim}", code_col)
-        if labels:
-            label_map = F.create_map(
-                *[x for code, lab in labels.items() for x in (F.lit(code), F.lit(lab))]
-            )
-            # Fallback to the code when no label exists (etl/main.py:118)
-            out = out.withColumn(
-                f"__label_{dim}", F.coalesce(label_map.getItem(code_col), code_col)
-            )
-        else:
-            out = out.withColumn(f"__label_{dim}", code_col)
+    def position(dim: str) -> Column:
+        # Row-major unravel, last dim fastest (reference etl/main.py:97-102):
+        # coord_d = (flat_idx // prod(sizes[d+1:])) % sizes[d]. Integer `div`,
+        # matching the pure-Python kernel's `//` exactly — double division
+        # loses exactness for flat_idx above 2^53.
+        d = dims.index(dim)
+        return F.expr(f"flat_idx div {math.prod(sizes[d + 1 :])}") % sizes[d]
 
-    ind_dim = find_indicator_dim(payload, indicators)
-    geo_dim = "geo" if "geo" in dims else None
-    time_dim = "time" if "time" in dims else None
-    unit_dim = "unit" if "unit" in dims else None
-    if ind_dim is None or geo_dim is None or time_dim is None:
-        return empty_out
+    def resolve(dim: str) -> tuple[Column, Column]:
+        pos = position(dim)
+        codes, names = _position_arrays(payload, dim, sizes[dims.index(dim)])
+        return F.get(codes, pos), F.get(names, pos)
 
-    def code(d):
-        return F.col(f"__code_{d}")
-
-    def label(d):
-        return F.col(f"__label_{d}")
-
+    geo_code, geo_label = resolve("geo")
+    ind_code, ind_label = resolve(ind_dim)
+    time_code, _ = resolve("time")
     null_s = F.lit(None).cast("string")
-    return (
-        out.where(code(ind_dim).isin(list(indicators)))  # P8 allow-list
-        .select(
-            F.lit(dataset_code).alias("dataset_code"),
-            code(geo_dim).alias("country_code"),
-            label(geo_dim).alias("country_name"),
-            code(ind_dim).alias("indicator_code"),
-            label(ind_dim).alias("indicator_label"),
-            (code(unit_dim) if unit_dim else null_s).alias("unit_code"),
-            (label(unit_dim) if unit_dim else null_s).alias("unit_label"),
-            F.to_date(code(time_dim), "yyyy").alias("time"),  # P3
-            F.col("value").cast("double").alias("value"),  # P2
-        )
+    unit_code, unit_label = resolve("unit") if "unit" in dims else (null_s, null_s)
+    return cells.where(ind_code.isin(list(indicators))).select(  # P8 allow-list
+        F.lit(dataset_code).alias("dataset_code"),
+        geo_code.alias("country_code"),
+        geo_label.alias("country_name"),
+        ind_code.alias("indicator_code"),
+        ind_label.alias("indicator_label"),
+        unit_code.alias("unit_code"),
+        unit_label.alias("unit_label"),
+        F.to_date(time_code, "yyyy").alias("time"),  # P3
+        F.col("value").cast("double").alias("value"),  # P2
     )
 
 
 def _out_schema() -> StructType:
-    from pyspark.sql.types import DateType, StringType
-
     fields = [
         StructField(c, DateType() if c == "time" else (DoubleType() if c == "value" else StringType()))
         for c in OBSERVATION_COLUMNS

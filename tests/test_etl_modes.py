@@ -112,6 +112,35 @@ def test_merge_upserts_and_preserves_untouched_partitions(spark, tmp_path):
     assert read_warehouse(spark, wh2).count() == 5
 
 
+def test_load_runs_the_batch_once(spark, tmp_path):
+    """A load executes its batch's plan once: the write, a merge's
+    partition and key lookups and the returned row count all read one
+    staged copy. A Python UDF on `value` counts the executions."""
+    from pyspark.sql import functions as F
+
+    runs = spark.sparkContext.accumulator(0)
+
+    def bump(v):
+        runs.add(1)
+        return v
+
+    batch = _batch(spark, n=50).withColumn("value", F.udf(bump, "double")("value"))
+
+    def bumps(action):
+        start = runs.value
+        result = action()
+        return runs.value - start, result
+
+    once, _ = bumps(lambda: stamp(clean(batch)).collect())
+    assert once > 0
+    wh = str(tmp_path / "obs")
+    for mode in ("append", "merge"):  # the merge finds the appended rows
+        n, loaded = bumps(lambda: run_etl(spark, [batch], wh, mode))
+        assert n == once, mode
+        assert loaded == 50, mode
+    assert read_warehouse(spark, wh).count() == 50
+
+
 def test_merge_null_unit_key_is_null_safe(spark, tmp_path):
     """A NULL unit_code survives cleaning (FIXTURES §3.3); merging the same
     NULL-unit key must UPDATE that row, not duplicate it."""

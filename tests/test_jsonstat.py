@@ -133,6 +133,75 @@ def test_datasource_format_matches_decode(spark, tmp_path):
         assert g.country_name == e.country_name
 
 
+# 4-dimension cube for the differential test: a `unit` dimension with a
+# list-form index, labels carrying quotes, backslashes, commas, a control
+# character, braces and non-ASCII text, a geo without a label, an indicator
+# outside the default allow-list and a sparse value map.
+EDGE_CUBE = {
+    "id": ["nrg_bal", "unit", "geo", "time"],
+    "size": [3, 2, 4, 3],
+    "dimension": {
+        "nrg_bal": {
+            "category": {
+                "index": {"GEP": 0, "FC_E": 1, "XXX": 2},
+                "label": {
+                    "GEP": "Gross 'electricity' production",
+                    "FC_E": 'Final "consumption", energy',
+                    "XXX": "Other",
+                },
+            }
+        },
+        "unit": {
+            "category": {
+                "index": ["GWH", "KTOE"],
+                "label": {
+                    "GWH": "Gigawatt\\hour",
+                    "KTOE": "Thousand {tonnes}\x1fof oil equivalent",
+                },
+            }
+        },
+        "geo": {
+            "category": {
+                "index": {"DE": 0, "FR": 1, "ZZ": 2, "ÅL": 3},
+                "label": {
+                    "DE": "Deutschland — Größe",
+                    "FR": 'Île-de-France, "FR"',
+                    "ÅL": "Åland 😀 {}",
+                },
+            }
+        },
+        "time": {
+            "category": {
+                "index": {"2021": 0, "2022": 1, "2023": 2},
+                "label": {"2021": "2021", "2022": "2022", "2023": "2023"},
+            }
+        },
+    },
+    "value": {str(i): i * 1.5 for i in range(72) if i % 5 != 3},
+}
+
+
+def test_decode_matches_python_kernel_on_edge_labels(spark):
+    """The Catalyst decode and the pure-Python kernel agree row for row on
+    EDGE_CUBE, and the decode plans without deprecated Column lookups."""
+    import warnings
+
+    from eurostat_energy_etl_pipeline_spark.sources.jsonstat_datasource import (
+        decode_document,
+    )
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        df = decode_jsonstat(spark, EDGE_CUBE, "nrg_cb_e")
+    got = sorted(tuple(r) for r in df.collect())
+    want = sorted(decode_document(EDGE_CUBE, "nrg_cb_e"))
+    assert got == want
+    # 2 allowed indicators x 2 units x 4 geos x 3 years, minus the holes
+    assert len(got) == sum(1 for i in range(48) if i % 5 != 3)
+    names = {r[2] for r in got} | {r[4] for r in got} | {r[6] for r in got}
+    assert {"ZZ", "Thousand {tonnes}\x1fof oil equivalent", "Åland 😀 {}"} <= names
+
+
 def test_datasource_invalid_payload_yields_empty(spark, tmp_path):
     from eurostat_energy_etl_pipeline_spark.sources.jsonstat_datasource import (
         register_jsonstat_source,

@@ -17,7 +17,6 @@ from __future__ import annotations
 import atexit
 import glob
 import hashlib
-import os
 import shutil
 import tempfile
 import threading
@@ -40,14 +39,8 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
 # Deterministic synthetic mapping o_orderkey -> indicator code (FIXTURES.md §2.1).
 INDICATOR_CODES = ("GEP", "FC_E", "FC_IND_E", "FC_TRA_E", "FC_OTH_CP_E", "FC_OTH_HH_E")
-
-
-def sf_dir_from_env() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
 
 
 # Confs that must hold on ANY session that reads the fixtures. The driver's

@@ -36,6 +36,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from eurostat_energy_etl_pipeline_spark.catalog import cached_view
+
 try:  # pragma: no cover - env-dependent
     from xgboost import XGBRegressor
 
@@ -238,9 +240,9 @@ def _forecast_group(pdf: pd.DataFrame) -> pd.DataFrame:
     return out
 
 
-def forecast_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Forecast every (geo, indicator) series from the warehouse view —
-    U2's historical+forecast union built per group."""
+def _forecast_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The grouped-map model fit over the cached yearly series: one
+    (geo, indicator) series per group, historical + forecast rows out."""
     from eurostat_energy_etl_pipeline_spark.plans.insights import yearly_series_view
 
     series = yearly_series_view(spark, sf_dir)
@@ -259,8 +261,35 @@ def forecast_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def forecast_all(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Forecast every (geo, indicator) series from the warehouse view —
+    U2's historical+forecast union built per group.
+
+    Session table (SURVEY §1.1 lists `forecast` as a derived table, like
+    `yearly_series`): the first call's action fits every series once, and
+    the rows stay cached for the life of the Spark session and this
+    `sf_dir` (`catalog.cached_view`; the warehouse is immutable, so they
+    never go stale). A dashboard lookup is a filter on those rows.
+
+    The table is stored sorted within its partitions, so its plan is not
+    `_forecast_plan` itself: Spark's CacheManager substitutes a cached plan
+    into every semantically equal fragment of later queries, and caching
+    the bare model fit would turn q35 (`forecast_query`, the model-fit
+    query) into a scan of this table."""
+    return cached_view(
+        "forecast",
+        spark,
+        sf_dir,
+        lambda: _forecast_plan(spark, sf_dir).sortWithinPartitions(
+            "geo", "indicator", "type", "year"
+        ),
+    )
+
+
 def forecast_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """queries() entry (rows-only check; invariants in tests/test_forecast).
+    It fits every series on each run: it reads `_forecast_plan`, not the
+    session table `forecast_all` caches.
 
     r15: total ordering via ``ordered_output`` — a bare ``orderBy``
     plans a range exchange whose boundary sampler EXECUTES the child,
@@ -270,5 +299,5 @@ def forecast_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from eurostat_energy_etl_pipeline_spark.functions import ordered_output
 
     return ordered_output(
-        forecast_all(spark, sf_dir), "geo", "indicator", "type", "year"
+        _forecast_plan(spark, sf_dir), "geo", "indicator", "type", "year"
     )

@@ -6,7 +6,7 @@ regex (Spark) and RE2 (DuckDB) so the oracle can mirror semantics exactly.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # BPE-ish word/number/punctuation splitter, engine-portable subset.
@@ -147,19 +147,3 @@ def redact_pii(col: Column) -> Column:
     out = F.regexp_replace(col, EMAIL_PATTERN, "[EMAIL]")
     out = F.regexp_replace(out, URL_PATTERN, "[URL]")
     return F.regexp_replace(out, NUMSEQ_PATTERN, "[NUM]")
-
-
-def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full feature set — one projection, zero shuffles."""
-    c = F.col(text_col)
-    return df.withColumns(
-        {
-            "n_tokens": token_count(c),
-            "n_bpe_tokens": bpe_ish_token_count(c),
-            "lang_pred": lang_id(c),
-            "punct_ratio": punct_ratio(c),
-            "stopword_ratio": stopword_ratio(c),
-            "quality": quality_score(c),
-            "fingerprint": fingerprint(c),
-        }
-    )

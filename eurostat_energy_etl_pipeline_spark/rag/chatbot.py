@@ -12,27 +12,18 @@ from pyspark.sql import functions as F
 
 from eurostat_energy_etl_pipeline_spark.catalog import session_memo
 from eurostat_energy_etl_pipeline_spark.plans.insights import insights_table
-from eurostat_energy_etl_pipeline_spark.rag.tfidf import semantic_search
+from eurostat_energy_etl_pipeline_spark.rag import tfidf
 
 RISING_WORDS = ("rising", "increasing", "growing")
 GEP_WORDS = ("gep", "gross electricity")
 
-# BM25 index memo for the chatbot's insights corpus, keyed like
-# bm25.documents_bm25_index — build_bm25_index caches its result DataFrame,
-# so rebuilding per question would leak one cached index into executor
-# storage per call; the corpus is deterministic per (session, sf_dir).
+# Session memos for the chatbot, keyed like bm25.documents_bm25_index: the
+# insights corpus is deterministic per (session, sf_dir), so its tf-idf and
+# BM25 posting-list indexes (each builder caches its result DataFrame) and
+# the parameterless intent plan are built once and serve every question.
+_INSIGHTS_TFIDF_CACHE: dict[tuple[str, str], "object"] = {}
 _INSIGHTS_BM25_CACHE: dict[tuple[str, str], "object"] = {}
-
-
-def _insights_bm25_index(spark: SparkSession, sf_dir: str, corpus):
-    from eurostat_energy_etl_pipeline_spark.rag.bm25 import build_bm25_index
-
-    return session_memo(
-        _INSIGHTS_BM25_CACHE,
-        spark,
-        sf_dir,
-        lambda: build_bm25_index(corpus, "text", "doc_id"),
-    )
+_RISING_GEP_PLAN: dict[tuple[str, str], "object"] = {}
 
 
 def route(question: str) -> str:
@@ -67,7 +58,10 @@ def answer_question(
         return {"mode": "empty", "answer": "Please ask a question.", "rows": []}
     mode = route(question)
     if mode == "intent":
-        row = fastest_rising_gep(spark, sf_dir).collect()
+        plan = session_memo(
+            _RISING_GEP_PLAN, spark, sf_dir, lambda: fastest_rising_gep(spark, sf_dir)
+        )
+        row = plan.collect()
         if not row:
             return {"mode": mode, "answer": "No GEP insights available.", "rows": []}
         r = row[0]
@@ -82,17 +76,31 @@ def answer_question(
         F.xxhash64("geo", "indicator").alias("doc_id"), "text"
     )
     if ranker == "bm25":
-        from eurostat_energy_etl_pipeline_spark.rag.bm25 import bm25_search
-
-        index = _insights_bm25_index(spark, sf_dir, corpus)
-        scored = bm25_search(index, question, k=5)
-        hits = (
-            scored.join(corpus, scored["id"] == corpus["doc_id"])
-            .select("id", F.round("score", 6).alias("score"), "text")
-            .orderBy(F.desc("score"), "id")
-            .collect()
+        from eurostat_energy_etl_pipeline_spark.rag.bm25 import (
+            bm25_search,
+            build_bm25_index,
         )
+
+        index = session_memo(
+            _INSIGHTS_BM25_CACHE,
+            spark,
+            sf_dir,
+            lambda: build_bm25_index(corpus, "text", "doc_id"),
+        )
+        scored = bm25_search(index, question, k=5)
     else:
-        hits = semantic_search(spark, corpus, question, k=5).collect()
+        index = session_memo(
+            _INSIGHTS_TFIDF_CACHE,
+            spark,
+            sf_dir,
+            lambda: tfidf.build_index(corpus, "text", "doc_id"),
+        )
+        scored = tfidf.search(index, spark, question, k=5)
+    hits = (
+        scored.join(corpus, scored["id"] == corpus["doc_id"])
+        .select("id", F.round("score", 6).alias("score"), "text")
+        .orderBy(F.desc("score"), "id")
+        .collect()
+    )
     lines = [f"- {h['text']} (score {h['score']:.3f})" for h in hits]
     return {"mode": mode, "answer": "\n".join(lines), "rows": [h.asDict() for h in hits]}

@@ -4,9 +4,9 @@ Mirrors /root/reference/viz/viz_utils.py:28-88: three chart products
 (single-country trend line, top-10 horizontal bar, country x year heatmap)
 written as PNG files. The reference pulls the ENTIRE observations table to
 the driver and subsets in pandas; here each chart's data reduction is a
-Catalyst plan (filter -> aggregate -> top-k), so only the already-aggregated
-k rows (years, 10 bars, or a bounded country x year matrix) ever reach the
-driver — the shape that still works when `observations` is 100 TB.
+Catalyst plan (filter -> aggregate -> top-k), so only one series' distinct
+(year, value) points, 10 bars or a bounded country x year matrix ever reach
+the driver — the shape that still works when `observations` is 100 TB.
 Rasterisation is plain numpy + the stdlib PNG codec in
 :mod:`eurostat_energy_etl_pipeline_spark.viz.png`; output is deterministic
 byte-for-byte for fixed input data.
@@ -65,16 +65,31 @@ def _rect(img: np.ndarray, x0: int, y0: int, x1: int, y1: int, color) -> None:
         img[y0:y1, x0:x1] = color
 
 
-def _line(img: np.ndarray, x0: float, y0: float, x1: float, y1: float, color, thick: int = 1) -> None:
-    """Dense-sampled segment draw (no aliasing needed for chart lines)."""
-    n = int(max(abs(x1 - x0), abs(y1 - y0), 1)) * 2 + 1
-    xs = np.rint(np.linspace(x0, x1, n)).astype(int)
-    ys = np.rint(np.linspace(y0, y1, n)).astype(int)
+def _polyline(img: np.ndarray, xs: np.ndarray, ys: np.ndarray, color, thick: int = 1) -> None:
+    """Dense-sampled draw of the segments joining consecutive (xs, ys)
+    points, all in one numpy pass (no aliasing needed for chart lines).
+
+    Segment i gets n_i = int(max(|dx|, |dy|, 1)) * 2 + 1 samples at
+    ``k * step + start`` with the last one set to the end point: the
+    arithmetic of ``np.linspace(start, stop, n_i)``, so the pixels match a
+    per-segment linspace draw exactly."""
+    x0, x1, y0, y1 = xs[:-1], xs[1:], ys[:-1], ys[1:]
+    n = np.maximum(np.maximum(np.abs(x1 - x0), np.abs(y1 - y0)), 1).astype(int) * 2 + 1
+    seg = np.repeat(np.arange(len(n)), n)
+    ends = np.cumsum(n)
+    k = (np.arange(ends[-1]) - (ends - n)[seg]).astype(float)
+
+    def sample(a0, a1):
+        v = k * ((a1 - a0) / (n - 1))[seg] + a0[seg]
+        v[ends - 1] = a1
+        return np.rint(v).astype(int)
+
+    px, py = sample(x0, x1), sample(y0, y1)
     h, w = img.shape[:2]
     r = thick // 2
     for dx in range(-r, r + 1):
         for dy in range(-r, r + 1):
-            xi, yi = xs + dx, ys + dy
+            xi, yi = px + dx, py + dy
             ok = (xi >= 0) & (xi < w) & (yi >= 0) & (yi < h)
             img[yi[ok], xi[ok]] = color
 
@@ -170,8 +185,8 @@ def line_chart(xs, ys, *, title: str, width: int = 960, height: int = 480) -> np
     _rect(img, px0, py1 - 1, px1, py1, BLACK)
     order = np.argsort(xs, kind="stable")
     xs, ys = xs[order], ys[order]
-    for i in range(len(xs) - 1):
-        _line(img, sx(xs[i]), sy(ys[i]), sx(xs[i + 1]), sy(ys[i + 1]), SERIES, thick=2)
+    if len(xs) > 1:
+        _polyline(img, sx(xs), sy(ys), SERIES, thick=2)
     for x, y in zip(xs, ys):
         _rect(img, int(sx(x)) - 2, int(sy(y)) - 2, int(sx(x)) + 3, int(sy(y)) + 3, SERIES)
     return img
@@ -258,7 +273,9 @@ def _obs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def plot_country_trend(spark: SparkSession, sf_dir: str, out_dir: str,
                        country_code: str, indicator_code: str) -> str | None:
     """Reference plot 1 (viz_utils.py:37-55): one country's indicator over
-    time. Spark reduces to <= #years distinct points before collect."""
+    time. Spark filters to the series and collects its distinct (yr, value)
+    points, several per year (one per distinct observation value), which
+    the chart joins in (yr, value) order."""
     rows = (
         _obs(spark, sf_dir)
         .where((F.col("country_code") == country_code)
@@ -284,13 +301,13 @@ def plot_country_trend(spark: SparkSession, sf_dir: str, out_dir: str,
 def plot_top_countries(spark: SparkSession, sf_dir: str, out_dir: str,
                        indicator_code: str) -> str | None:
     """Reference plot 2 (viz_utils.py:58-68): latest-year per-country SUM,
-    10 largest. Broadcast latest-year scalar + TakeOrderedAndProject."""
+    10 largest. The latest year is collected once and filtered on as a
+    literal; the top-k is a TakeOrderedAndProject."""
     obs = _obs(spark, sf_dir)
-    latest = obs.agg(F.max(F.year("time")).alias("max_yr"))
+    year = obs.agg(F.max(F.year("time"))).collect()[0][0]
     rows = (
-        obs.where(F.col("indicator_code") == indicator_code)
-        .withColumn("yr", F.year("time"))
-        .join(F.broadcast(latest), F.col("yr") == F.col("max_yr"))
+        obs.where((F.col("indicator_code") == indicator_code)
+                  & (F.year("time") == year))
         .groupBy("country_code")
         .agg(F.sum(F.col("value").cast("double")).alias("total"))
         .orderBy(F.desc("total"), "country_code")
@@ -299,7 +316,6 @@ def plot_top_countries(spark: SparkSession, sf_dir: str, out_dir: str,
     )
     if not rows:
         return None
-    year = latest.collect()[0]["max_yr"]
     img = barh_chart(
         [r["country_code"] for r in rows],
         [r["total"] for r in rows],

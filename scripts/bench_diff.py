@@ -12,12 +12,15 @@ queries), using the per-query best-of-N sequential timings.
 from __future__ import annotations
 
 import json
+import os
 import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> None:
     old = json.load(open(sys.argv[1]))
-    new_path = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/bench_full.json"
+    new_path = sys.argv[2] if len(sys.argv) > 2 else os.path.join(ROOT, "bench_full.json")
     new = json.load(open(new_path))
     oq, nq = old["queries"], new["queries"]
     shared = sorted(set(oq) & set(nq))

@@ -24,9 +24,11 @@ checks only the first N registry entries (the driver samples the first 50).
 
 import hashlib
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb
 import pandas as pd

@@ -3,10 +3,12 @@
 (noop write of a pre-built DataFrame). If construction is a big share,
 an engine-level plan-handle cache (prepared statements) is the win."""
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from eurostat_energy_etl_pipeline_spark.session import autotune_for_input, get_spark
 

@@ -3,10 +3,12 @@ bench config, then measure the incremental cost of the same plans reading a
 cached tokenized-documents view. Decides whether the shared token cache
 (VERDICT r5 suggestion) is worth landing."""
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 

@@ -13,14 +13,16 @@ from __future__ import annotations
 import glob
 import json
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:
     last: dict[str, int] = {}
-    for f in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for f in sorted(glob.glob(f"{ROOT}/CORRECTNESS_r*.json")):
         rnd = int(re.search(r"_r(\d+)\.json$", f).group(1))
         for k in json.load(open(f)):
             last[k] = max(last.get(k, 0), rnd)
@@ -66,7 +68,7 @@ def main() -> None:
         lines.append(f'    "{n}",')
     block = "\n".join(lines)
 
-    path = "/root/repo/__spark_entry__.py"
+    path = f"{ROOT}/__spark_entry__.py"
     src = open(path).read()
     new = re.sub(
         r"(_DRIVER_CHECK_PRIORITY = \[\n).*?(\n\])",

@@ -255,3 +255,68 @@ def test_model_selection_over_real_rmse():
         {"LeastSquaresAR"} if fc.HAVE_XGB else set()
     ) - ({"HoltLinear"} if fc.HAVE_STATSMODELS else set())
     assert set(out["model"]) <= real_names | fallback
+
+
+# --- the session forecast table ----------------------------------------------
+
+_KEY = ["geo", "indicator", "type", "year"]
+
+
+def _sorted(pdf):
+    return pdf.sort_values(_KEY).reset_index(drop=True)
+
+
+def test_forecast_table_is_built_once_per_session(spark, sf_dir):
+    assert forecast_all(spark, sf_dir) is forecast_all(spark, sf_dir)
+
+
+def test_forecast_table_matches_the_model_fit_query(spark, sf_dir):
+    """The cached `forecast_all` rows are q35's grouped-map rows."""
+    from eurostat_energy_etl_pipeline_spark.ml.forecast import forecast_query
+
+    table = _sorted(forecast_all(spark, sf_dir).toPandas())
+    fit = _sorted(forecast_query(spark, sf_dir).toPandas())
+    assert len(table) > 0
+    pd.testing.assert_frame_equal(table, fit, check_exact=True)
+
+
+def test_model_fit_query_does_not_read_the_forecast_table(spark, sf_dir):
+    """Spark substitutes a cached plan into every semantically equal
+    fragment of a later query; q35 must still fit the models (one
+    explicit repartition under the grouped map) once the table is cached
+    and materialized."""
+    import contextlib
+    import io
+
+    from eurostat_energy_etl_pipeline_spark.ml.forecast import forecast_query
+
+    forecast_all(spark, sf_dir).count()
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        forecast_query(spark, sf_dir).explain("formatted")
+    plan = buf.getvalue()
+    assert plan.count("REPARTITION_BY_NUM") == 1
+    assert "FlatMapGroupsInPandas" in plan.split("REPARTITION_BY_NUM")[0]
+
+
+# the guard's empty frames only change pandas' future concat dtype rules;
+# the comparison casts to Spark's dtypes
+@pytest.mark.filterwarnings("ignore:The behavior of DataFrame concatenation")
+def test_forecast_kernel_matches_pandas_groupby_apply(spark, sf_dir):
+    """`_forecast_group` applied by pandas alone, one group at a time,
+    gives the rows Spark's `applyInPandas` gives for the same series."""
+    from eurostat_energy_etl_pipeline_spark.plans.insights import (
+        yearly_series_view,
+    )
+
+    series = yearly_series_view(spark, sf_dir).toPandas()
+    expect = series.groupby(["geo", "indicator"], group_keys=False)[
+        ["geo", "indicator", "yr", "val"]
+    ].apply(_forecast_group)
+    got = forecast_all(spark, sf_dir).toPandas()
+    assert len(got) > 0
+    pd.testing.assert_frame_equal(
+        _sorted(got),
+        _sorted(expect.astype(got.dtypes.to_dict())),
+        check_exact=True,
+    )

@@ -101,3 +101,64 @@ def test_bm25_ranker_route(spark, sf_dir):
     # unknown-ranker falls back to tfidf behavior via default arg contract
     base = answer_question(spark, sf_dir, "household energy consumption trends")
     assert base["mode"] == "semantic" and len(base["rows"]) >= 1
+
+
+# --- chatbot session state ---------------------------------------------------
+
+_SEMANTIC_Q = "which countries show declining energy consumption"
+
+
+def test_tfidf_answers_build_the_insights_index_once(spark, sf_dir, monkeypatch):
+    """The tf-idf route probes one session-memoized index: the second and
+    third answers build no index plan and equal the first, which equals
+    the one-shot build + search."""
+    from pyspark.sql import functions as F
+
+    from eurostat_energy_etl_pipeline_spark.plans.insights import insights_table
+    from eurostat_energy_etl_pipeline_spark.rag import chatbot, tfidf
+
+    corpus = (
+        insights_table(spark, sf_dir)
+        .withColumnRenamed("insight_text", "text")
+        .select(F.xxhash64("geo", "indicator").alias("doc_id"), "text")
+    )
+    one_shot = [r.asDict() for r in semantic_search(spark, corpus, _SEMANTIC_Q).collect()]
+
+    builds = []
+    real = tfidf.build_index
+
+    def counting(*args, **kwargs):
+        builds.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(tfidf, "build_index", counting)
+    monkeypatch.setattr(chatbot, "_INSIGHTS_TFIDF_CACHE", {})
+    answers = []
+    for _ in range(3):
+        answers.append(chatbot.answer_question(spark, sf_dir, _SEMANTIC_Q))
+        assert len(builds) == 1
+    assert answers[0]["mode"] == "semantic" and answers[0]["rows"]
+    assert answers[0]["rows"] == one_shot
+    assert answers[1] == answers[0] and answers[2] == answers[0]
+
+
+def test_intent_answers_reuse_one_plan(spark, sf_dir, monkeypatch):
+    from eurostat_energy_etl_pipeline_spark.rag import chatbot
+
+    want = [r.asDict() for r in chatbot.fastest_rising_gep(spark, sf_dir).collect()]
+    builds = []
+    real = chatbot.fastest_rising_gep
+
+    def counting(*args):
+        builds.append(1)
+        return real(*args)
+
+    monkeypatch.setattr(chatbot, "fastest_rising_gep", counting)
+    monkeypatch.setattr(chatbot, "_RISING_GEP_PLAN", {})
+    answers = [
+        chatbot.answer_question(spark, sf_dir, "which country has rising gep?")
+        for _ in range(3)
+    ]
+    assert builds == [1]
+    assert answers[0]["mode"] == "intent" and answers[0]["rows"] == want
+    assert answers[1] == answers[0] and answers[2] == answers[0]

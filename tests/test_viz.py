@@ -117,3 +117,79 @@ def test_trend_skips_missing_country(spark, sf_dir, tmp_path):
 
     assert plot_country_trend(spark, sf_dir, str(tmp_path), "NO_SUCH", "GEP") is None
     assert list(tmp_path.iterdir()) == []
+
+
+# ------------------------------------------------- one-pass polyline raster
+def _reference_line(img, x0, y0, x1, y1, color, thick=1):
+    """The per-segment drawer `line_chart` used before its one-pass
+    polyline: one np.linspace per segment."""
+    n = int(max(abs(x1 - x0), abs(y1 - y0), 1)) * 2 + 1
+    xs = np.rint(np.linspace(x0, x1, n)).astype(int)
+    ys = np.rint(np.linspace(y0, y1, n)).astype(int)
+    h, w = img.shape[:2]
+    r = thick // 2
+    for dx in range(-r, r + 1):
+        for dy in range(-r, r + 1):
+            xi, yi = xs + dx, ys + dy
+            ok = (xi >= 0) & (xi < w) & (yi >= 0) & (yi < h)
+            img[yi[ok], xi[ok]] = color
+
+
+def _reference_polyline(img, xs, ys, color, thick=1):
+    for i in range(len(xs) - 1):
+        _reference_line(img, xs[i], ys[i], xs[i + 1], ys[i + 1], color, thick)
+
+
+def _series_cases():
+    rng = np.random.default_rng(20)
+    for _ in range(6):  # random series
+        n = int(rng.integers(2, 60))
+        yield rng.uniform(1990, 2030, n), rng.normal(0, 1e3, n)
+    # the dashboard's shape: several distinct values per year
+    years = np.repeat(np.arange(1992, 1999), 40)
+    yield years, rng.uniform(1e3, 5e5, years.size)
+    yield [2000, 2000, 2000, 2001], [1.0, 5.0, -3.0, 2.0]  # duplicate x: vertical
+    yield [2000, 2001, 2002, 2003], [7.0, 7.0, 7.0, 7.0]  # horizontal
+    yield [2000, 2001, 2002], [1.0, 1e-9, 1e9]  # near-flat then steep
+    yield [2005], [3.0]  # single point: markers only
+    yield [2000.5, 2000.5], [2.0, 2.0]  # one degenerate segment
+
+
+_CASES = list(_series_cases())
+
+
+@pytest.mark.parametrize("case", range(len(_CASES)))
+def test_line_chart_pixels_match_per_segment_drawer(monkeypatch, case):
+    from eurostat_energy_etl_pipeline_spark.viz import charts
+
+    xs, ys = _CASES[case]
+    got = line_chart(xs, ys, title="T")
+    monkeypatch.setattr(charts, "_polyline", _reference_polyline)
+    want = line_chart(xs, ys, title="T")
+    assert (decode_png(encode_png(got)) == decode_png(encode_png(want))).all()
+
+
+def test_polyline_matches_per_segment_drawer_at_edges_and_ties():
+    from eurostat_energy_etl_pipeline_spark.viz.charts import _polyline
+
+    rng = np.random.default_rng(3)
+    cases = [
+        (np.array([-5.0, 10.0, 55.0]), np.array([3.0, -4.0, 50.0])),
+        (np.array([0.0, 47.0, 47.0, 0.0]), np.array([0.0, 0.0, 47.0, 47.0])),
+        (rng.uniform(-10, 60, 40), rng.uniform(-10, 60, 40)),
+    ]
+    # endpoints on and near half-pixel ties, where one ulp flips np.rint
+    for seed in range(24):
+        ties = np.random.default_rng(seed)
+        m = int(ties.integers(2, 8))
+        frac = [0.5, 0.1, 0.3, 0.7, 0.25, 0.75]
+        cases.append(tuple(
+            ties.integers(0, 40, m) + ties.choice(frac, m) for _ in range(2)
+        ))
+    for thick in (1, 2, 3):
+        for xs, ys in cases:
+            got = np.zeros((48, 48, 3), np.uint8)
+            want = got.copy()
+            _polyline(got, xs, ys, SERIES, thick=thick)
+            _reference_polyline(want, xs, ys, SERIES, thick=thick)
+            assert (decode_png(encode_png(got)) == decode_png(encode_png(want))).all()

@@ -214,18 +214,19 @@ def write_warehouse(df: DataFrame, warehouse_dir: str, mode: str) -> None:
     the batch's partition footprint, not the table size. Production tables
     would use a transactional format (Delta/Iceberg MERGE = new files +
     metadata swap); this is the same plan shape over plain parquet, with the
-    affected-partition remainder staged (`plans.staged`, released after the
+    affected-partition survivors staged (`plans.staged`, released after the
     write) so the read and the overwrite of the same path don't collide.
 
-    A merge reads `df` three times (partition footprint, batch keys, staged
-    union), an append once; `run_etl` passes its batch already staged, so
-    none of these reads re-runs the batch's plan."""
+    A merge reads `df` three times (partition footprint, batch keys, the
+    write's union with the survivors), an append once; `run_etl` passes its
+    batch already staged, so none of these reads re-runs the batch's plan
+    and only the survivors are staged again."""
     if mode not in MODES:
         raise ValueError(f"mode must be one of {MODES}, got {mode!r}")
     out = df.withColumn("year", F.year("time"))
     write_mode = "append" if mode == "append" else "overwrite"
     writer_opts = {}
-    rows = nullcontext(out)
+    kept = nullcontext()
     if mode == "merge":
         spark = df.sparkSession
         try:
@@ -246,11 +247,11 @@ def write_warehouse(df: DataFrame, warehouse_dir: str, mode: str) -> None:
                 lambda a, b: a & b,
                 [affected[k].eqNullSafe(keys[k]) for k in MERGE_KEY],
             )
-            survivors = affected.join(F.broadcast(keys), cond, "left_anti")
-            rows = staged(survivors.unionByName(out))
-    with rows as out:
+            kept = staged(affected.join(F.broadcast(keys), cond, "left_anti"))
+    with kept as survivors:
+        rows = out if survivors is None else survivors.unionByName(out)
         (
-            out
+            rows
             # cluster within partitions by country for min/max stat pruning
             .repartition("dataset_code", "year")
             .sortWithinPartitions("country_code")

@@ -60,9 +60,6 @@ _PLAN_CACHE: OrderedDict[tuple[str, str, str], _Plan] = OrderedDict()
 # reordering is not atomic, so every touch of the cache or of a record
 # takes this (uncontended, nanoseconds next to a 200 ms plan build)
 _LOCK = threading.Lock()
-# pins made outside any scope (direct operator calls); release_pins()
-# with no name releases them
-_UNSCOPED = _Plan()
 
 
 class _Building(threading.local):
@@ -125,9 +122,9 @@ def drop_plan(name: str) -> int:
     single query is large. Dropping the plan after its comparison lets
     ContextCleaner GC all of it; repeated-workload harnesses (bench)
     keep the cache, which is the whole point of the memo. Session-
-    lifetime caches (catalog cached_view, prepared graphs, at-rest
-    index memos) are deliberately untouched — they are the bounded,
-    intended long-lived state."""
+    lifetime caches (catalog cached_views such as the text indexes and
+    the shared graph, at-rest artifact memos) are deliberately
+    untouched — they are the bounded, intended long-lived state."""
     with _LOCK:
         keys = [k for k in _PLAN_CACHE if k[2] == name]
         dropped = [_PLAN_CACHE.pop(k) for k in keys]
@@ -157,13 +154,15 @@ def pin(df: DataFrame) -> DataFrame:
     """persist() ``df`` for the life of the current scope. Use for an
     expensive subtree referenced more than once in the SAME returned plan
     (or operation): the pin stays alive while the cached plan is
-    measured, and is released when the plan leaves the cache or by
-    :func:`release_pins`."""
+    measured, and is released when the plan leaves the cache, when the
+    scope exits, or by :func:`release_pins`. Outside any scope there is
+    no owner to release it, so nothing is persisted and ``df`` comes back
+    as it was (a direct operator call recomputes the shared subtree)."""
     stack = _BUILDING.stack
-    rec = stack[-1] if stack else _UNSCOPED
-    df.persist()
-    with _LOCK:
-        rec.pins.append(df)
+    if stack:
+        df.persist()
+        with _LOCK:
+            stack[-1].pins.append(df)
     return df
 
 
@@ -233,16 +232,14 @@ def checkpoint_ids(name: str) -> frozenset[int] | None:
 
 
 def release_pins(name: str | None = None, blocking: bool = False) -> int:
-    """Unpersist every handle pinned by `name`'s cached plans (or by all
-    plans and unscoped calls when None); the plans stay cached. Returns
-    the number of handles released. ``blocking=False`` (the default) is
-    the harness hot path; the count-based lifetime test passes
-    ``blocking=True`` because an async unpersist can land AFTER a later
-    baseline snapshot and deflate it mid-measurement."""
+    """Unpersist every handle pinned by `name`'s cached plans (by every
+    cached plan when None); the plans stay cached. Returns the number of
+    handles released. ``blocking=False`` (the default) is the harness hot
+    path; the count-based lifetime test passes ``blocking=True`` because
+    an async unpersist can land AFTER a later baseline snapshot and
+    deflate it mid-measurement."""
     with _LOCK:
         plans = [p for k, p in _PLAN_CACHE.items() if name in (None, k[2])]
-    if name is None:
-        plans.append(_UNSCOPED)
     return _release(plans, blocking)
 
 

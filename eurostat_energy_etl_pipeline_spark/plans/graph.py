@@ -29,7 +29,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from eurostat_energy_etl_pipeline_spark.catalog import load_tables, session_memo
+from eurostat_energy_etl_pipeline_spark.catalog import (
+    cached_view,
+    load_tables,
+    session_memo,
+)
 from eurostat_energy_etl_pipeline_spark.functions import presentation_sort
 from eurostat_energy_etl_pipeline_spark import plans
 from eurostat_energy_etl_pipeline_spark.plans import query
@@ -47,7 +51,7 @@ def _grid(col):
     return F.floor(col * _G + 0.5) / _G
 
 
-#: q99's prepared graph per (applicationId, sf_dir), a T4 session memo.
+#: the shared graph's (nodes, base, |V|) per (applicationId, sf_dir)
 _PREPARED_GRAPHS: dict[tuple[str, str], tuple[DataFrame, DataFrame, int]] = {}
 
 
@@ -105,9 +109,10 @@ def _dec_node(enc) -> "F.Column":
 
 def _shared_purchase_graph(spark, sf_dir: str):
     """The symmetric customer-supplier purchase graph shared by
-    q99/q172/q189, prepared once per (session, sf_dir) with
-    :func:`prepare_graph` and cached under the T4 contract. Nodes are
-    the order-isomorphic int64 encodings (see :func:`_enc_node`)."""
+    q99/q172/q189 as ``(nodes, base, n_nodes)``: the two plans of
+    :func:`prepare_graph` held as catalog session views (T4), and the
+    node count read once off the cached node set. Nodes are the
+    order-isomorphic int64 encodings (see :func:`_enc_node`)."""
 
     def build():
         t = load_tables(spark, sf_dir)
@@ -123,42 +128,40 @@ def _shared_purchase_graph(spark, sf_dir: str):
         edges = e0.unionByName(
             e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        return prepare_graph(edges)
+        node_plan, base_plan = prepare_graph(edges)
+        nodes = cached_view("purchase_graph_nodes", spark, sf_dir, lambda: node_plan)
+        base = cached_view("purchase_graph_base", spark, sf_dir, lambda: base_plan)
+        return nodes, base, nodes.count()  # the count fills the node view
 
     return session_memo(_PREPARED_GRAPHS, spark, sf_dir, build)
 
 
 def prepare_graph(
     edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> tuple[DataFrame, DataFrame, int]:
-    """Persist the iteration-invariant graph state for :func:`pagerank`.
+) -> tuple[DataFrame, DataFrame]:
+    """The iteration-invariant graph state for :func:`pagerank`, as plain
+    plans ``(nodes, base)``: the node set and the degree-annotated edges.
 
-    Returns ``(nodes, base, n_nodes)``. Degree-annotated edges and the
-    node set are PINNED: every iteration joins against both, and without
-    the persist each of the N iterations re-derives the edge
-    construction (here: a fact-fact join + distinct) from scratch —
-    measured 5.3 s -> ~1.5 s at sf0.1 for 3 iterations. Bounded state
-    (|E| + |V| rows, no payloads), same lifetime contract as the T4
-    cached views. The pinned table is PRE-PARTITIONED on the join key
-    (the textbook iterative-join layout): the cached partitioning
-    satisfies every iteration's join requirement, so only the O(|V|)
-    rank table shuffles per iteration — the edge table never moves
-    again. THE CALLER OWNS THE LIFETIME: either unpersist after the
-    ranks are materialized (what :func:`pagerank` does when it prepares
-    its own state) or hold it session-long (what q99 does via the
-    prepared-graph cache).
+    Every iteration joins against both, so a caller caches them (q99's
+    shared graph holds them as catalog session views): without the cache
+    each of the N iterations re-derives the edge construction (here: a
+    fact-fact join + distinct) from scratch — measured 5.3 s -> ~1.5 s at
+    sf0.1 for 3 iterations. Bounded state (|E| + |V| rows, no payloads).
+    ``base`` is PRE-PARTITIONED on the join key (the textbook
+    iterative-join layout): the cached partitioning satisfies every
+    iteration's join requirement, so only the O(|V|) rank table shuffles
+    per iteration — the edge table never moves again.
     """
     nodes = (
         edges.select(F.col(src).alias("node"))
         .unionByName(edges.select(F.col(dst).alias("node")))
         .distinct()
-        .persist()
     )
     deg = edges.groupBy(src).agg(F.count(F.lit(1)).alias("deg"))
-    # r15: pin the edge table at COMPUTE width, not the byte-sized static
+    # r15: cache the edge table at COMPUTE width, not the byte-sized static
     # shuffle width — the cached partitioning dictates the width of every
     # iteration's join+aggregate pipeline (EnsureRequirements exchanges
-    # the rank side to match the satisfied pinned side), and the
+    # the rank side to match the satisfied cached side), and the
     # iterations are CPU-bound (gridded-decimal contribution math), so
     # the 4-partition interactive width ran them on 4 of 32 cores.
     # max(cores, static width) leaves warehouse layouts unchanged.
@@ -166,64 +169,43 @@ def prepare_graph(
         keyed_compute_width,
     )
 
-    base = (
-        edges.join(deg, src)
-        .repartition(keyed_compute_width(edges), F.col(src))
-        .persist()
-    )
-    n_nodes = nodes.count()  # O(1) driver scalar, fixes the teleport mass
-    return nodes, base, n_nodes
+    base = edges.join(deg, src).repartition(keyed_compute_width(edges), F.col(src))
+    return nodes, base
 
 
 def pagerank(
-    edges: DataFrame,
+    prepared: tuple[DataFrame, DataFrame, int],
     damping: float = DAMPING,
     n_iter: int = N_ITER,
     src: str = "src",
     dst: str = "dst",
-    prepared: tuple[DataFrame, DataFrame, int] | None = None,
-    complete_in_coverage: bool = False,
 ) -> DataFrame:
-    """Power-iteration PageRank over a directed edge list.
+    """Power-iteration PageRank over a SYMMETRIC graph prepared by
+    :func:`prepare_graph`: ``prepared`` is its ``(nodes, base)`` plans,
+    cached by the caller, plus the node count ``n_nodes``.
 
-    Returns (node, rank) for every node appearing in ``edges``. Nodes
-    with no in-edges settle at the teleport mass (1-d)/N; dangling-mass
-    redistribution is deliberately omitted (the input graph here is
-    symmetric, so there are no dangling nodes — document before reusing
-    on one-directional graphs). ``n_iter`` fixed small and unrolled by
-    the driver: each iteration is one join + one aggregate.
-
-    When ``prepared`` is None the function pins its own graph state,
-    then MATERIALIZES the final ranks (localCheckpoint — eager, lineage
-    truncated) and unpersists the pins before returning, so repeated
-    invocations do not accumulate session-lifetime cache entries (r5
-    advice). Callers that run many pagerank passes over the same graph
-    should :func:`prepare_graph` once and pass it in; they own that
-    lifetime.
+    Returns (node, rank) for every node. Dangling-mass redistribution is
+    deliberately omitted (a symmetric graph has no dangling nodes), and
+    every node has an in-edge, so the damped update applies directly to
+    the aggregated mass. ``n_iter`` fixed small and unrolled by the
+    driver: each iteration is one join + one aggregate.
     """
-    own = prepared is None
-    if own:
-        nodes, base, n_nodes = prepare_graph(edges, src=src, dst=dst)
-    else:
-        nodes, base, n_nodes = prepared
+    nodes, base, n_nodes = prepared
     teleport = float((1.0 - damping)) / n_nodes
     init = round(1.0 / n_nodes, 12)
     ranks = nodes.select("node", F.lit(init).alias("rank"))
-    # r14 (guide §3.1): the edge table is PINNED pre-partitioned on the
+    # r14 (guide §3.1): the edge table is CACHED pre-partitioned on the
     # join key, but a sort-merge join re-SORTS all |E| cached rows every
     # iteration; a shuffled-hash join builds the hash from the O(|V|)
     # rank table instead and streams the edges unsorted (per-partition
     # build = |V|/shuffle-partitions rows — bounded, since the shuffle
     # width is autotuned to input size). Same rows, same arithmetic;
     # measured with q172's identical shape: 1.59 s -> 1.22 s at sf0.1.
-    # r14: when every node has an in-edge (`complete_in_coverage` — true
-    # for any symmetrized edge list, where in-set == out-set and every
-    # node has degree >= 1), the per-iteration "left-join back to nodes"
-    # that re-attaches zero-mass nodes is an identity: the damped update
-    # applies directly to the aggregate (coalesce(mass, 0) never fires).
-    # That removes one join + its stages per iteration (§2.4 remove
-    # shuffles outright). Graphs that may have in-edge-less nodes keep
-    # the general path — those nodes must settle at the teleport mass.
+    # r14: in a symmetric edge list in-set == out-set and every node has
+    # degree >= 1, so a "left-join back to nodes" re-attaching zero-mass
+    # nodes would be an identity: the damped update applies directly to
+    # the aggregate, one join + its stages fewer per iteration (§2.4
+    # remove shuffles outright).
     for _ in range(n_iter):
         contrib = (
             base.join(ranks.hint("shuffle_hash"), base[src] == ranks["node"])
@@ -237,31 +219,10 @@ def pagerank(
         summed = contrib.groupBy("node").agg(
             F.sum("c").cast("double").alias("mass")
         )
-        if complete_in_coverage:
-            ranks = summed.select(
-                "node",
-                _grid(
-                    F.lit(teleport) + F.lit(damping) * F.col("mass")
-                ).alias("rank"),
-            )
-        else:
-            ranks = (
-                nodes.join(summed.hint("shuffle_hash"), "node", "left")
-                .select(
-                    "node",
-                    _grid(
-                        F.lit(teleport)
-                        + F.lit(damping) * F.coalesce("mass", F.lit(0.0))
-                    ).alias("rank"),
-                )
-            )
-    if own:
-        # Materialize before dropping the pins: localCheckpoint executes
-        # the plan and truncates lineage, so the returned DataFrame no
-        # longer references nodes/base and the unpersist is safe.
-        ranks = plans.at_rest(ranks)
-        nodes.unpersist()
-        base.unpersist()
+        ranks = summed.select(
+            "node",
+            _grid(F.lit(teleport) + F.lit(damping) * F.col("mass")).alias("rank"),
+        )
     return ranks
 
 
@@ -323,18 +284,18 @@ def q99(spark, sf_dir):
     iterated fixpoint). Ranks are reported in parts-per-million so the
     presentation grid is well inside the certified precision.
 
-    The prepared graph (pinned nodes + degree-annotated pre-partitioned
-    edges + |V|) is cached per (session, sf_dir) under the T4 contract —
-    the edge DERIVATION (orders⋈lineitem distinct + symmetrize) runs
-    once per session, not once per invocation, and repeated invocations
-    do not stack fresh persist entries (r5 advice). Each call still
-    executes the three iterations against the pins. Nodes travel as the
+    The prepared graph (nodes + degree-annotated pre-partitioned edges,
+    both catalog session views, + |V|) is built once per (session,
+    sf_dir) under the T4 contract — the edge DERIVATION
+    (orders⋈lineitem distinct + symmetrize) runs once per session, not
+    once per invocation, and repeated invocations do not stack fresh
+    cache entries (r5 advice). Each call still executes the three
+    iterations against the cached views. Nodes travel as the
     order-isomorphic int64 encodings (r15, see :func:`_enc_node`) —
     every iteration keys 16-byte fixed rows instead of strings — and the
     top-20 tiebreak orders on the encoding (== the string order by
     construction) before the final decode."""
-    prepared = _shared_purchase_graph(spark, sf_dir)
-    ranks = pagerank(edges=None, prepared=prepared, complete_in_coverage=True)
+    ranks = pagerank(_shared_purchase_graph(spark, sf_dir))
     return (
         ranks.select(
             "node", F.round(F.col("rank") * 1e6, 4).alias("rank_ppm")
@@ -499,7 +460,7 @@ def label_propagation(
     compared bytewise in both engines (UTF8_BINARY / DuckDB binary
     collation). The driver holds only the loop counter."""
     lab = nodes.select("node", F.col("node").alias("label"))
-    # r14: shuffled-hash joins for both per-round joins — the pinned edge
+    # r14: shuffled-hash joins for both per-round joins — the cached edge
     # table streams unsorted (SMJ re-sorted all |E| cached rows every
     # round) and the node-grain tables build bounded per-partition
     # hashes (the width is autotuned to input size). Two rejected
@@ -560,7 +521,7 @@ def label_propagation(
 def q172(spark, sf_dir):
     """Bounded-radius LABEL PROPAGATION communities over the symmetric
     customer-supplier purchase graph (q99's graph, shared PREPARED
-    state — the pinned pre-partitioned edge table serves both queries'
+    state — the cached pre-partitioned edge table serves both queries'
     iterations in one session): 3 synchronous min-label rounds, then a
     community-size census. See :func:`label_propagation` for semantics
     and the exact-replay contract. Labels travel as the

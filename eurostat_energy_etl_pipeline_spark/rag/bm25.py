@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from eurostat_energy_etl_pipeline_spark.catalog import session_memo
+from eurostat_energy_etl_pipeline_spark.catalog import cached_view
 from eurostat_energy_etl_pipeline_spark.functions.parallelism import widen_if_narrow
 from eurostat_energy_etl_pipeline_spark.operators.text import (
     ENGLISH_STOPWORDS,
@@ -58,8 +58,9 @@ def build_bm25_index(
     One lazy plan: tokenize once, carry the per-doc length through the
     explode, aggregate tf, attach df with a window keyed like the tf
     aggregate (exchange reuse), join the 1-row (N, avgdl) aggregate by
-    broadcast. No driver actions, no UDFs; cache the result for repeated
-    queries exactly like `tfidf.build_index`."""
+    broadcast. No driver actions, no UDFs; a plain plan that a repeated
+    searcher caches through `catalog.cached_view`, exactly like
+    `tfidf.build_index`."""
     from pyspark.sql.window import Window
 
     toks = widen_if_narrow(df).select(
@@ -74,7 +75,7 @@ def build_bm25_index(
         .groupBy("id", "term", "dl")
         .agg(F.count(F.lit(1)).cast("double").alias("tf"))
     )
-    index = (
+    return (
         tf.withColumn(
             "df", F.count(F.lit(1)).over(Window.partitionBy("term")).cast("double")
         )
@@ -90,8 +91,6 @@ def build_bm25_index(
             ).alias("idf"),
         )
     )
-    index.cache()
-    return index
 
 
 def _query_unigrams(query: str) -> list[str]:
@@ -131,13 +130,11 @@ def bm25_search(index: DataFrame, query: str, k: int = 5) -> DataFrame:
     )
 
 
-# Index memo per (session, corpus path) — same contract as tfidf's T4 cache.
-_BM25_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def documents_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return session_memo(
-        _BM25_CACHE,
+    """BM25 postings over the documents fixture, a session view like
+    `tfidf.documents_index`."""
+    return cached_view(
+        "documents_bm25_index",
         spark,
         sf_dir,
         lambda: build_bm25_index(

@@ -10,19 +10,16 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from eurostat_energy_etl_pipeline_spark.catalog import session_memo
+from eurostat_energy_etl_pipeline_spark.catalog import cached_view, session_memo
 from eurostat_energy_etl_pipeline_spark.plans.insights import insights_table
 from eurostat_energy_etl_pipeline_spark.rag import tfidf
 
 RISING_WORDS = ("rising", "increasing", "growing")
 GEP_WORDS = ("gep", "gross electricity")
 
-# Session memos for the chatbot, keyed like bm25.documents_bm25_index: the
-# insights corpus is deterministic per (session, sf_dir), so its tf-idf and
-# BM25 posting-list indexes (each builder caches its result DataFrame) and
-# the parameterless intent plan are built once and serve every question.
-_INSIGHTS_TFIDF_CACHE: dict[tuple[str, str], "object"] = {}
-_INSIGHTS_BM25_CACHE: dict[tuple[str, str], "object"] = {}
+# The insights corpus is deterministic per (session, sf_dir), so its tf-idf
+# posting-list index (a catalog session view) and the parameterless intent
+# plan (a session memo) are built once and serve every question.
 _RISING_GEP_PLAN: dict[tuple[str, str], "object"] = {}
 
 
@@ -45,15 +42,9 @@ def fastest_rising_gep(spark: SparkSession, sf_dir: str):
     )
 
 
-def answer_question(
-    spark: SparkSession, sf_dir: str, question: str, ranker: str = "tfidf"
-) -> dict:
-    """Returns {mode, answer, rows} mirroring the reference's two paths.
-
-    `ranker` picks the retrieval scorer for the semantic route: "tfidf"
-    (reference parity, rag/tfidf.py) or "bm25" (rag/bm25.py) — both are
-    posting-list index probes with identical plan shape, so swapping the
-    scorer changes ranking behavior only, not the distribution story."""
+def answer_question(spark: SparkSession, sf_dir: str, question: str) -> dict:
+    """Returns {mode, answer, rows} mirroring the reference's two paths;
+    the semantic route ranks with tf-idf (reference parity, rag/tfidf.py)."""
     if not question or not question.strip():
         return {"mode": "empty", "answer": "Please ask a question.", "rows": []}
     mode = route(question)
@@ -75,27 +66,13 @@ def answer_question(
     corpus = ins.select(
         F.xxhash64("geo", "indicator").alias("doc_id"), "text"
     )
-    if ranker == "bm25":
-        from eurostat_energy_etl_pipeline_spark.rag.bm25 import (
-            bm25_search,
-            build_bm25_index,
-        )
-
-        index = session_memo(
-            _INSIGHTS_BM25_CACHE,
-            spark,
-            sf_dir,
-            lambda: build_bm25_index(corpus, "text", "doc_id"),
-        )
-        scored = bm25_search(index, question, k=5)
-    else:
-        index = session_memo(
-            _INSIGHTS_TFIDF_CACHE,
-            spark,
-            sf_dir,
-            lambda: tfidf.build_index(corpus, "text", "doc_id"),
-        )
-        scored = tfidf.search(index, spark, question, k=5)
+    index = cached_view(
+        "insights_tfidf_index",
+        spark,
+        sf_dir,
+        lambda: tfidf.build_index(corpus, "text", "doc_id"),
+    )
+    scored = tfidf.search(index, spark, question, k=5)
     hits = (
         scored.join(corpus, scored["id"] == corpus["doc_id"])
         .select("id", F.round("score", 6).alias("score"), "text")

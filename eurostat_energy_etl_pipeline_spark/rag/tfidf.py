@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from eurostat_energy_etl_pipeline_spark.catalog import session_memo
+from eurostat_energy_etl_pipeline_spark.catalog import cached_view
 from eurostat_energy_etl_pipeline_spark.functions.parallelism import widen_if_narrow
 from eurostat_energy_etl_pipeline_spark.operators.text import (
     ENGLISH_STOPWORDS,
@@ -54,8 +54,10 @@ def _terms(col) -> F.Column:
 def build_index(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Posting-list index: (id, term, w, idf, norm). Cache it for repeated
-    queries (T4 — the engine-side analog of the reference's lru_cache).
+    """Posting-list index: (id, term, w, idf, norm), as a plain plan. A
+    caller that searches it repeatedly caches it through
+    `catalog.cached_view` (T4 — the engine-side analog of the reference's
+    lru_cache), as `documents_index` does.
 
     One fully-lazy plan, no driver-side actions: the corpus size N enters
     the idf expression as a broadcast 1-row aggregate instead of a separate
@@ -88,9 +90,7 @@ def build_index(
         .withColumn("w", F.col("tf") * F.col("idf"))
     )
     norms = w.groupBy("id").agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("norm"))
-    index = w.select("id", "term", "idf", "w").join(norms, "id")
-    index.cache()
-    return index
+    return w.select("id", "term", "idf", "w").join(norms, "id")
 
 
 def _query_terms(query: str) -> dict[str, float]:
@@ -175,7 +175,8 @@ def semantic_search(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """One-shot build + search (T2+T3), joined back to the source text."""
+    """One-shot build + search (T2+T3), joined back to the source text.
+    The index is not cached: it lives as long as the returned plan."""
     index = build_index(corpus, text_col, id_col)
     hits = search(index, spark, query, k)
     return (
@@ -185,15 +186,12 @@ def semantic_search(
     )
 
 
-# Index memo per (session, corpus path) — the engine analog of the
-# reference's process-wide lru_cache on get_index (rag_engine.py:14-15).
-_INDEX_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def documents_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Build-once posting-list index over the documents fixture (T4)."""
-    return session_memo(
-        _INDEX_CACHE,
+    """Posting-list index over the documents fixture, a session view (T4;
+    the engine analog of the reference's process-wide lru_cache on
+    get_index, rag_engine.py:14-15)."""
+    return cached_view(
+        "documents_tfidf_index",
         spark,
         sf_dir,
         lambda: build_index(

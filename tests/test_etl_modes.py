@@ -141,6 +141,38 @@ def test_load_runs_the_batch_once(spark, tmp_path):
     assert read_warehouse(spark, wh).count() == 50
 
 
+def test_merge_stages_only_the_surviving_rows(spark, tmp_path, monkeypatch):
+    """Inside a merge only the affected partitions' surviving rows are
+    staged; the batch, already staged by `run_etl`, is not staged twice."""
+    from contextlib import contextmanager
+
+    from eurostat_energy_etl_pipeline_spark.etl import job
+
+    wh = str(tmp_path / "obs")
+    run_etl(spark, [_batch(spark)], wh, "full-refresh")
+    base = _batch(spark).where("country_code = 'C1'").collect()[0].asDict()
+    # a new key in C1's year partition: C1 survives, nothing is replaced
+    delta = spark.createDataFrame(
+        [Row(**{**base, "country_code": "C9", "country_name": "Country 9", "value": 9.0})]
+    )
+
+    staged_rows = []
+    real = job.staged
+
+    @contextmanager
+    def recording(df):
+        with real(df) as out:
+            staged_rows.append(sorted((r["country_code"], r["value"]) for r in out.collect()))
+            yield out
+
+    monkeypatch.setattr(job, "staged", recording)
+    assert run_etl(spark, [delta], wh, "merge") == 1
+    # run_etl's batch, then the merge's survivors alone
+    assert staged_rows == [[("C9", 9.0)], [("C1", 1.0)]]
+    got = {r["country_code"]: r["value"] for r in read_warehouse(spark, wh).collect()}
+    assert got == {"C0": 0.0, "C1": 1.0, "C2": 2.0, "C3": 3.0, "C4": 4.0, "C9": 9.0}
+
+
 def test_merge_null_unit_key_is_null_safe(spark, tmp_path):
     """A NULL unit_code survives cleaning (FIXTURES §3.3); merging the same
     NULL-unit key must UPDATE that row, not duplicate it."""

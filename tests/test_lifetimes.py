@@ -244,6 +244,78 @@ def test_index_merges_release_their_pins_when_the_write_fails(
         assert _persistent_rdd_ids(spark) - before == set()
 
 
+def test_direct_minhash_calls_persist_nothing(spark, tmp_path):
+    """Pins made outside any scope persist nothing: direct
+    `minhash_lsh_pairs` and `match_against_index` calls leave no
+    persistent RDD behind and return the rows of a scoped (pinned) call."""
+    from eurostat_energy_etl_pipeline_spark import plans as P
+    from eurostat_energy_etl_pipeline_spark.operators import dedup as D
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta gamma delta epsilon token_{i % 4}") for i in range(12)],
+        "doc_id long, text string",
+    )
+    new = spark.createDataFrame(
+        [(100, "alpha beta gamma delta epsilon token_1"), (101, "zeta eta theta iota")],
+        "doc_id long, text string",
+    )
+    mh = str(tmp_path / "minhash")
+    D.write_minhash_index(docs, mh, num_buckets=4)
+    with P.scope():
+        want_pairs = D.minhash_lsh_pairs(docs).collect()
+        want_matches = D.match_against_index(spark, new, mh).collect()
+    assert want_pairs and want_matches
+
+    before = _persistent_rdd_ids(spark)
+    for _ in range(2):
+        assert D.minhash_lsh_pairs(docs).collect() == want_pairs
+    assert D.match_against_index(spark, new, mh).collect() == want_matches
+    assert _persistent_rdd_ids(spark) - before == set()
+
+
+def test_one_shot_semantic_search_caches_nothing(spark):
+    from eurostat_energy_etl_pipeline_spark.rag.tfidf import semantic_search
+
+    corpus = spark.createDataFrame(
+        [(i, f"energy consumption trend {w}") for i, w in enumerate("abcdef")],
+        "doc_id long, text string",
+    )
+    before = _persistent_rdd_ids(spark)
+    hits = [semantic_search(spark, corpus, "energy trend").collect() for _ in range(3)]
+    assert hits[0] and hits[1] == hits[0] and hits[2] == hits[0]
+    assert _persistent_rdd_ids(spark) - before == set()
+
+
+def test_q99_caches_only_the_session_graph_views(spark, sf_dir, tmp_path):
+    """Building and running q99 caches the shared graph's two catalog
+    views and nothing else. The fixture is read through a fresh path, so
+    the views are new for this test."""
+    import __spark_entry__ as m
+
+    from eurostat_energy_etl_pipeline_spark import catalog
+    from eurostat_energy_etl_pipeline_spark import plans as P
+    from eurostat_energy_etl_pipeline_spark.plans import graph
+
+    sf = str(tmp_path / "sf")
+    os.symlink(sf_dir, sf)
+    name = "q99_pagerank"
+    before = _persistent_rdd_ids(spark)
+    m.queries()[name](spark, sf).write.format("noop").mode("overwrite").save()
+    added = _persistent_rdd_ids(spark) - before
+    assert len(added) == 2
+
+    key = (spark.sparkContext.applicationId, sf)
+    views = [
+        catalog._VIEW_CACHE[v].pop(key)
+        for v in ("purchase_graph_nodes", "purchase_graph_base")
+    ]
+    graph._PREPARED_GRAPHS.pop(key)
+    P.drop_plan(name)
+    for v in views:
+        v.unpersist(True)
+    assert _persistent_rdd_ids(spark) & added == set()
+
+
 def test_staged_releases_its_blocks_on_exit(spark):
     from eurostat_energy_etl_pipeline_spark.plans import staged
 
@@ -361,12 +433,9 @@ def test_checkpoints_and_overwrite_mode_have_one_home():
         assert not conf_set.search(src), f
 
 
-# Modules that may still `.persist(` / `.cache()` outside `plans.pin` and
-# `catalog`, with the reason each owns its own lifetime.
+# Modules that may still persist, cache, unpersist or localCheckpoint
+# outside `plans` and `catalog`, with the reason each owns its own lifetime.
 PERSIST_OWNERS = {
-    "plans/graph.py": "prepare_graph: the caller owns the pinned graph state",
-    "rag/bm25.py": "rag index: built once per session memo",
-    "rag/tfidf.py": "rag index: built once per session memo",
     "operators/bpe.py": "rolling re-persist of the merge table, try/finally",
 }
 
@@ -375,7 +444,9 @@ def test_persist_has_one_home():
     """Regrowth guard: plan- and operation-lifetime persists go through
     `plans.pin` (inside `plans.scope` for an operation), session ones
     through `catalog`; the allowlist holds only the remaining owners."""
-    persist = re.compile(r"\.persist\(|\.cache\(\)")
+    persist = re.compile(
+        r"\.persist\(|\.cache\(\)|\.unpersist\(|\.localCheckpoint\("
+    )
     homes = {PKG / "plans" / "__init__.py", PKG / "catalog.py"}
     found = {
         f.relative_to(PKG).as_posix()

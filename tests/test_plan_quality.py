@@ -804,7 +804,7 @@ def test_pinned_intermediates_release_to_baseline(spark, queries):
 
     # EVERY pin-using query — no exclusions. Queries whose kernels
     # localCheckpoint plan-lifetime intermediates (connected_components,
-    # BFS levels, own-lifetime pagerank) self-declare via
+    # BFS levels, incremental artifacts) self-declare via
     # plans.at_rest() during build; the loop below reads
     # that registry instead of a hand-maintained exclusion list
     # (VERDICT r12 item 4): pins must still fully release for them, but

@@ -88,21 +88,6 @@ def test_intent_routing():
     assert route("rising unemployment") == "semantic"  # rising but not GEP
 
 
-def test_bm25_ranker_route(spark, sf_dir):
-    from eurostat_energy_etl_pipeline_spark.rag.chatbot import answer_question
-
-    out = answer_question(
-        spark, sf_dir, "household energy consumption trends", ranker="bm25"
-    )
-    assert out["mode"] == "semantic"
-    assert len(out["rows"]) >= 1
-    scores = [r["score"] for r in out["rows"]]
-    assert scores == sorted(scores, reverse=True)
-    # unknown-ranker falls back to tfidf behavior via default arg contract
-    base = answer_question(spark, sf_dir, "household energy consumption trends")
-    assert base["mode"] == "semantic" and len(base["rows"]) >= 1
-
-
 # --- chatbot session state ---------------------------------------------------
 
 _SEMANTIC_Q = "which countries show declining energy consumption"
@@ -114,6 +99,7 @@ def test_tfidf_answers_build_the_insights_index_once(spark, sf_dir, monkeypatch)
     the one-shot build + search."""
     from pyspark.sql import functions as F
 
+    from eurostat_energy_etl_pipeline_spark import catalog
     from eurostat_energy_etl_pipeline_spark.plans.insights import insights_table
     from eurostat_energy_etl_pipeline_spark.rag import chatbot, tfidf
 
@@ -132,7 +118,7 @@ def test_tfidf_answers_build_the_insights_index_once(spark, sf_dir, monkeypatch)
         return real(*args, **kwargs)
 
     monkeypatch.setattr(tfidf, "build_index", counting)
-    monkeypatch.setattr(chatbot, "_INSIGHTS_TFIDF_CACHE", {})
+    monkeypatch.setitem(catalog._VIEW_CACHE, "insights_tfidf_index", {})
     answers = []
     for _ in range(3):
         answers.append(chatbot.answer_question(spark, sf_dir, _SEMANTIC_Q))

@@ -6,6 +6,8 @@ regex (Spark) and RE2 (DuckDB) so the oracle can mirror semantics exactly.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -28,6 +30,19 @@ ENGLISH_STOPWORDS = LANG_MARKERS["en"] + ["a", "an", "for", "on", "as", "are", "
 def whitespace_tokens(col: Column) -> Column:
     """Lowercased whitespace tokens, empty-safe (no '' token for '')."""
     return F.split(F.trim(F.lower(col)), "\\s+")
+
+
+# Java's \s: ASCII whitespace only (Python's \s also matches \xa0, \x1c-\x1f
+# and the other Unicode spaces).
+_JAVA_SPACE = re.compile("[ \t\n\x0b\f\r]+")
+
+
+def split_whitespace(text: str) -> list[str]:
+    """Driver-side twin of `whitespace_tokens` for one short string (a
+    search query): Spark's `trim` strips only ' ' and its split regex is
+    Java's ASCII `\\s`, so `str.strip()` / `re`'s Unicode `\\s` would
+    tokenize some strings differently from the corpus side."""
+    return _JAVA_SPACE.split(text.lower().strip(" "))
 
 
 def token_count(col: Column) -> Column:

@@ -247,6 +247,13 @@ def insights_table(spark, sf_dir):
     )
 
 
+def insights_view(spark, sf_dir):
+    """Cached insights table, a session view: the chatbot's intent answers
+    and its semantic corpus (index build and text lookup) all read it, so
+    its aggregate and string formatting run once per session."""
+    return cached_view("insights", spark, sf_dir, lambda: insights_table(spark, sf_dir))
+
+
 @query(
     "q74_forecast_features",
     oracle=with_cte(

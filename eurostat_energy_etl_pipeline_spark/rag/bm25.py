@@ -33,6 +33,7 @@ from eurostat_energy_etl_pipeline_spark.catalog import cached_view
 from eurostat_energy_etl_pipeline_spark.functions.parallelism import widen_if_narrow
 from eurostat_energy_etl_pipeline_spark.operators.text import (
     ENGLISH_STOPWORDS,
+    split_whitespace,
     whitespace_tokens,
 )
 from eurostat_energy_etl_pipeline_spark.plans import staged
@@ -95,11 +96,10 @@ def build_bm25_index(
 
 def _query_unigrams(query: str) -> list[str]:
     """Driver-side mirror of `_unigrams` for the (single, short) query
-    string — distinct stopword-filtered lowercase tokens."""
-    import re
-
+    string — distinct stopword-filtered lowercase tokens, split as the
+    corpus side splits (`split_whitespace`)."""
     seen: dict[str, None] = {}
-    for t in re.split(r"\s+", query.strip().lower()):
+    for t in split_whitespace(query):
         if t and t not in ENGLISH_STOPWORDS:
             seen[t] = None
     return list(seen)

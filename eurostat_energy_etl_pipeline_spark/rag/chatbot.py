@@ -11,15 +11,16 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from eurostat_energy_etl_pipeline_spark.catalog import cached_view, session_memo
-from eurostat_energy_etl_pipeline_spark.plans.insights import insights_table
+from eurostat_energy_etl_pipeline_spark.plans.insights import insights_view
 from eurostat_energy_etl_pipeline_spark.rag import tfidf
 
 RISING_WORDS = ("rising", "increasing", "growing")
 GEP_WORDS = ("gep", "gross electricity")
 
-# The insights corpus is deterministic per (session, sf_dir), so its tf-idf
-# posting-list index (a catalog session view) and the parameterless intent
-# plan (a session memo) are built once and serve every question.
+# The insights corpus is deterministic per (session, sf_dir), so the
+# insights table and its tf-idf posting-list index (catalog session views)
+# and the parameterless intent plan (a session memo) are built once and
+# serve every question.
 _RISING_GEP_PLAN: dict[tuple[str, str], "object"] = {}
 
 
@@ -34,7 +35,7 @@ def route(question: str) -> str:
 def fastest_rising_gep(spark: SparkSession, sf_dir: str):
     """A12 argmax over insights restricted to GEP
     (/root/reference/llm_app/chatbot.py:9-46)."""
-    ins = insights_table(spark, sf_dir)
+    ins = insights_view(spark, sf_dir)
     return (
         ins.where(F.col("indicator").isin("nrg_cb_e", "GEP"))
         .orderBy(F.desc("slope_per_year"), "geo", "indicator")
@@ -61,10 +62,10 @@ def answer_question(spark: SparkSession, sf_dir: str, question: str) -> dict:
             f"({r['slope_per_year']:+.2f}/yr, {r['start_year']}-{r['end_year']})."
         )
         return {"mode": mode, "answer": answer, "rows": [r.asDict()]}
-    ins = insights_table(spark, sf_dir).withColumnRenamed("insight_text", "text")
     # geo+indicator keys -> stable surrogate id for the index
-    corpus = ins.select(
-        F.xxhash64("geo", "indicator").alias("doc_id"), "text"
+    corpus = insights_view(spark, sf_dir).select(
+        F.xxhash64("geo", "indicator").alias("doc_id"),
+        F.col("insight_text").alias("text"),
     )
     index = cached_view(
         "insights_tfidf_index",
@@ -72,12 +73,12 @@ def answer_question(spark: SparkSession, sf_dir: str, question: str) -> dict:
         sf_dir,
         lambda: tfidf.build_index(corpus, "text", "doc_id"),
     )
-    scored = tfidf.search(index, spark, question, k=5)
-    hits = (
-        scored.join(corpus, scored["id"] == corpus["doc_id"])
-        .select("id", F.round("score", 6).alias("score"), "text")
-        .orderBy(F.desc("score"), "id")
-        .collect()
+    # three jobs: the query's idfs, the top-k, then the k texts by id
+    scored = tfidf.search(index, question, k=5).collect()
+    text = dict(corpus.where(F.col("doc_id").isin([h["id"] for h in scored])).collect())
+    hits = sorted(
+        ({"id": h["id"], "score": h["score"], "text": text[h["id"]]} for h in scored),
+        key=lambda h: (-h["score"], h["id"]),
     )
     lines = [f"- {h['text']} (score {h['score']:.3f})" for h in hits]
-    return {"mode": mode, "answer": "\n".join(lines), "rows": [h.asDict() for h in hits]}
+    return {"mode": mode, "answer": "\n".join(lines), "rows": hits}

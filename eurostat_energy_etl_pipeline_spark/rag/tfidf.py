@@ -6,13 +6,18 @@ and does a dense cosine against the whole corpus in driver memory
 **inverted index**: a (doc_id, term, weight) posting-list DataFrame.
 
 - Build: tokenize -> stopword-filter -> unigrams ∪ bigrams -> per-doc term
-  counts (tf) -> document frequencies (df) -> smoothed idf -> weights +
-  per-doc L2 norms. Two hash aggregates, no UDFs, no driver materialization.
-- Search: the query's terms (a handful) broadcast-join the posting lists —
-  only matching postings are read — then one groupBy(doc) sums the partial
-  dot products; normalize; TakeOrderedAndProject top-k. This is exactly how
-  a search engine scales: cost ~ postings of the query terms, independent of
-  corpus width.
+  counts (tf) -> document frequencies (df, a window over term) -> smoothed
+  idf -> weights -> per-doc L2 norms (a window over doc). One hash
+  aggregate and two windows, no UDFs, no driver materialization; the
+  postings come out hash-partitioned by doc id.
+- Search: one collect reads the idfs of the query's terms (a handful of
+  rows, one flagged posting per term); the query weights and norm become
+  literals. The query's terms then filter the posting lists — only
+  matching postings are read — one groupBy(doc) sums the partial dot
+  products without an exchange, and a TakeOrderedAndProject keeps the
+  top-k: two jobs per search on a cached index. This is exactly how a
+  search engine scales: cost ~ postings of the query terms, independent
+  of corpus width.
 
 Weighting mirrors sklearn's defaults: tf * (ln((1+N)/(1+df)) + 1), L2-normed
 (/root/reference/llm_app/rag_engine.py:29-33 semantics, not bit-parity —
@@ -21,6 +26,8 @@ SURVEY.md §5.2.3).
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -28,6 +35,7 @@ from eurostat_energy_etl_pipeline_spark.catalog import cached_view
 from eurostat_energy_etl_pipeline_spark.functions.parallelism import widen_if_narrow
 from eurostat_energy_etl_pipeline_spark.operators.text import (
     ENGLISH_STOPWORDS,
+    split_whitespace,
     whitespace_tokens,
 )
 
@@ -54,19 +62,22 @@ def _terms(col) -> F.Column:
 def build_index(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Posting-list index: (id, term, w, idf, norm), as a plain plan. A
-    caller that searches it repeatedly caches it through
-    `catalog.cached_view` (T4 — the engine-side analog of the reference's
-    lru_cache), as `documents_index` does.
+    """Posting-list index: (id, term, idf, w, norm, head), as a plain plan,
+    hash-partitioned by `id`. A caller that searches it repeatedly caches
+    it through `catalog.cached_view` (T4 — the engine-side analog of the
+    reference's lru_cache), as `documents_index` does.
 
     One fully-lazy plan, no driver-side actions: the corpus size N enters
     the idf expression as a broadcast 1-row aggregate instead of a separate
     `df.count()` job (which round-1 profiling showed as a whole extra scan
-    per index build). Document frequency is attached with a window over
-    `term` — same shuffle key as the tf aggregate, so Catalyst reuses the
-    exchange rather than shuffling twice. `idf` rides along per posting so
-    the query side can weight its terms identically without recomputing
-    document frequencies."""
+    per index build). Document frequency is a window over `term`, the L2
+    norm a window over `id`; the second one leaves the postings
+    hash-partitioned by `id`, so a reader that groups or windows by doc
+    (`search`, q112, q162) adds no exchange. `idf` rides along per posting
+    so the query side weights its terms identically without recomputing
+    document frequencies, and `head` marks one posting per term (its
+    lowest id), so a query reads its term idfs with a filter, not an
+    aggregate."""
     from pyspark.sql.window import Window
 
     n_docs = df.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
@@ -76,8 +87,14 @@ def build_index(
         .groupBy("id", "term")
         .agg(F.count(F.lit(1)).cast("double").alias("tf"))
     )
+    by_term = Window.partitionBy("term").orderBy("id")
+    whole_term = by_term.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     w = (
-        tf.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("term")))
+        tf.select(
+            "*",
+            F.count(F.lit(1)).over(whole_term).alias("df"),
+            (F.row_number().over(by_term) == 1).alias("head"),
+        )
         .join(F.broadcast(n_docs))
         .select(
             "id",
@@ -86,37 +103,30 @@ def build_index(
                 "idf"
             ),
             "tf",
+            "head",
         )
         .withColumn("w", F.col("tf") * F.col("idf"))
     )
-    norms = w.groupBy("id").agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("norm"))
-    return w.select("id", "term", "idf", "w").join(norms, "id")
+    norm = F.sqrt(F.sum(F.col("w") * F.col("w")).over(Window.partitionBy("id")))
+    return w.select("id", "term", "idf", "w", norm.alias("norm"), "head")
 
 
 def _query_terms(query: str) -> dict[str, float]:
     """Driver-side mirror of `_terms` for the query string (it is ONE short
     string — tokenizing it in Python is not a distribution concern, and it
-    saves a createDataFrame + explode round-trip per search). Mirrors
-    split(trim(lower(s)), '\\s+') + stopword filter + adjacent bigrams."""
-    import re
+    saves a createDataFrame + explode round-trip per search): the corpus
+    tokenizer's `split_whitespace` twin + stopword filter + adjacent
+    bigrams, counted."""
     from collections import Counter
 
-    toks = [
-        t
-        for t in re.split(r"\s+", query.strip().lower())
-        if t and t not in ENGLISH_STOPWORDS
-    ]
+    toks = [t for t in split_whitespace(query) if t and t not in ENGLISH_STOPWORDS]
     grams = toks + [f"{a} {b}" for a, b in zip(toks, toks[1:])]
     return {t: float(c) for t, c in Counter(grams).items()}
 
 
-def search(
-    index: DataFrame,
-    spark: SparkSession,
-    query: str,
-    k: int = 5,
-) -> DataFrame:
-    """Cosine top-k of the query against the posting-list index.
+def search(index: DataFrame, query: str, k: int = 5) -> DataFrame:
+    """Cosine top-k of the query against the posting-list index: `(id,
+    score)` with the score rounded to 6 dp by Spark's HALF_UP `round`.
 
     sklearn-parity weighting on BOTH sides (rag_engine.py:29-33): the query
     vector gets the same smoothed idf as the corpus (read from the index's
@@ -124,46 +134,30 @@ def search(
     a fitted vectorizer ignores them) and is L2-normalized, so scores are
     true cosines, not dot products against a unit document vector.
 
-    Plan shape: the query's terms become a literal IN-list on the cached
-    posting lists (cost ~ postings of those terms), one hash aggregate per
-    doc, ordered-limit. The constant query-norm divides the k result rows
-    AFTER the limit — it cannot change the ordering."""
+    Plan shape: one collect reads the idfs of the query's terms off their
+    `head` postings (at most one row per term), and the query weights and
+    the query norm enter the plan as literals. What is returned is the
+    query's terms as a literal IN-list on the postings (cost ~ postings of
+    those terms), one hash aggregate per doc — no exchange, the index is
+    partitioned by `id` — and a TakeOrderedAndProject on dot/norm: one job
+    for a caller that collects it. The constant query norm cannot change
+    the ordering. Rows come in dot/norm order; a caller that presents them
+    sorts on the rounded score."""
     qtf = _query_terms(query)
-    if not qtf:
-        return index.select("id").limit(0).withColumn("score", F.lit(0.0))
-    qtf_map = F.create_map(
-        *[x for t, c in qtf.items() for x in (F.lit(t), F.lit(c))]
-    )
     matched = index.where(F.col("term").isin(list(qtf)))
-    # L2 norm of the query vector over the corpus-vocabulary terms it hit.
-    qnorm = (
-        matched.groupBy("term")
-        .agg(F.first("idf").alias("idf"))
-        .agg(
-            F.sqrt(
-                F.sum(F.pow(qtf_map[F.col("term")] * F.col("idf"), F.lit(2.0)))
-            ).alias("qnorm")
-        )
-    )
-    top = (
-        matched.withColumn("qw", qtf_map[F.col("term")] * F.col("idf"))
-        .groupBy("id", "norm")
-        .agg(F.sum(F.col("w") * F.col("qw")).alias("dot"))
+    idf = dict(matched.where(F.col("head")).select("term", "idf").collect()) if qtf else {}
+    if not idf:
+        return index.select("id").limit(0).withColumn("score", F.lit(0.0))
+    qw = {t: qtf[t] * idf[t] for t in sorted(idf)}
+    qnorm = math.sqrt(sum(x * x for x in qw.values()))
+    qw_map = F.create_map(*[x for t, v in qw.items() for x in (F.lit(t), F.lit(v))])
+    score = F.when(F.col("norm") > 0, F.col("dot") / (F.col("norm") * F.lit(qnorm)))
+    return (
+        matched.groupBy("id", "norm")
+        .agg(F.sum(F.col("w") * qw_map[F.col("term")]).alias("dot"))
         .orderBy(F.desc(F.col("dot") / F.col("norm")), "id")
         .limit(k)
-    )
-    return (
-        top.join(F.broadcast(qnorm))
-        .select(
-            "id",
-            F.when(
-                (F.col("norm") > 0) & (F.col("qnorm") > 0),
-                F.col("dot") / (F.col("norm") * F.col("qnorm")),
-            )
-            .otherwise(F.lit(0.0))
-            .alias("score"),
-        )
-        .orderBy(F.desc("score"), "id")
+        .select("id", F.round(score.otherwise(F.lit(0.0)), 6).alias("score"))
     )
 
 
@@ -177,11 +171,10 @@ def semantic_search(
 ) -> DataFrame:
     """One-shot build + search (T2+T3), joined back to the source text.
     The index is not cached: it lives as long as the returned plan."""
-    index = build_index(corpus, text_col, id_col)
-    hits = search(index, spark, query, k)
+    hits = search(build_index(corpus, text_col, id_col), query, k)
     return (
         hits.join(corpus, hits["id"] == corpus[id_col])
-        .select("id", F.round("score", 6).alias("score"), F.col(text_col))
+        .select("id", "score", F.col(text_col))
         .orderBy(F.desc("score"), "id")
     )
 
@@ -209,17 +202,15 @@ def tfidf_search_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`tfidf_oracle_sql`) — the driver hash-compares the top-k ids AND
     cosine scores against an independent DuckDB recomputation of the
     sklearn-parity weighting. Ranking invariants stay in tests/test_rag.py."""
-    index = documents_index(spark, sf_dir)
-    return search(index, spark, SEARCH_QUERY, k=5).select(
-        "id", F.round("score", 6).alias("score")
-    )
+    return search(documents_index(spark, sf_dir), SEARCH_QUERY, k=5)
 
 
 def tfidf_oracle_sql(query: str = SEARCH_QUERY, k: int = 5) -> str:
     """DuckDB recomputation of the whole TF-IDF pipeline: tokenize +
     stopword-filter + uni/bigrams, tf, windowed df, smoothed idf
     (ln((1+N)/(1+df))+1), L2 norms, query-side idf weighting and the final
-    cosine — mirroring `build_index`/`search` construct for construct. The
+    cosine — the arithmetic of `build_index`/`search`, written as joins
+    and aggregates where the engine uses windows and literals. The
     query's term counts are inlined from the same `_query_terms` the engine
     uses, so both sides weight the query identically."""
     stop_sql = "[" + ", ".join(f"'{s}'" for s in sorted(ENGLISH_STOPWORDS)) + "]"

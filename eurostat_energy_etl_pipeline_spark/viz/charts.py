@@ -3,8 +3,9 @@
 Mirrors /root/reference/viz/viz_utils.py:28-88: three chart products
 (single-country trend line, top-10 horizontal bar, country x year heatmap)
 written as PNG files. The reference pulls the ENTIRE observations table to
-the driver and subsets in pandas; here each chart's data reduction is a
-Catalyst plan (filter -> aggregate -> top-k), so only one series' distinct
+the driver and subsets in pandas; here each chart is one Spark job over a
+cached session view (a filtered scan of `observations`, or a filter/top-k
+over its per-(country, indicator, year) totals), so only one series'
 (year, value) points, 10 bars or a bounded country x year matrix ever reach
 the driver — the shape that still works when `observations` is 100 TB.
 Rasterisation is plain numpy + the stdlib PNG codec in
@@ -20,6 +21,11 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from eurostat_energy_etl_pipeline_spark.catalog import (
+    cached_view,
+    observations_view,
+    session_memo,
+)
 from eurostat_energy_etl_pipeline_spark.viz.png import encode_png
 
 # ---------------------------------------------------------------------------
@@ -256,7 +262,9 @@ def heatmap_chart(row_labels, col_labels, matrix, *, title: str, width: int = 96
 
 
 # ---------------------------------------------------------------------------
-# The sink: Spark-side reduction -> O(k) collect -> raster -> PNG file
+# The sink: one Spark job per chart -> bounded collect -> raster -> PNG file.
+# The per-(country, indicator, year) totals and the latest year are
+# session state, built by the first top-10 or heatmap chart.
 # ---------------------------------------------------------------------------
 
 # A heatmap wider than this many cells cannot be *rendered* meaningfully;
@@ -264,32 +272,57 @@ def heatmap_chart(row_labels, col_labels, matrix, *, title: str, width: int = 96
 MAX_HEATMAP_CELLS = 200_000
 
 
-def _obs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from eurostat_energy_etl_pipeline_spark.catalog import observations_view
+def _totals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Session view: ``sum(value::double)`` per (country, indicator, yr),
+    the grain the top-10 and heatmap charts read (at most countries x
+    indicators x years rows)."""
+    return cached_view(
+        "observation_totals",
+        spark,
+        sf_dir,
+        lambda: observations_view(spark, sf_dir)
+        .groupBy("country_code", "indicator_code", F.year("time").cast("int").alias("yr"))
+        .agg(F.sum(F.col("value").cast("double")).alias("total")),
+    )
 
-    return observations_view(spark, sf_dir)
+
+_LATEST_YEAR: dict = {}
+
+
+def _latest_year(spark: SparkSession, sf_dir: str) -> int | None:
+    """Latest observation year, read once per session."""
+    return session_memo(
+        _LATEST_YEAR,
+        spark,
+        sf_dir,
+        lambda: _totals(spark, sf_dir).agg(F.max("yr")).collect()[0][0],
+    )
+
+
+def _spark_asc(point: tuple) -> tuple:
+    """Sort key of Spark's ascending order (nulls first)."""
+    return tuple((v is not None, v) for v in point)
 
 
 def plot_country_trend(spark: SparkSession, sf_dir: str, out_dir: str,
                        country_code: str, indicator_code: str) -> str | None:
     """Reference plot 1 (viz_utils.py:37-55): one country's indicator over
-    time. Spark filters to the series and collects its distinct (yr, value)
-    points, several per year (one per distinct observation value), which
-    the chart joins in (yr, value) order."""
+    time. One filtered scan of the cached observations view collects the
+    series' (yr, value) points; the driver keeps the distinct ones, several
+    per year (one per distinct observation value), in (yr, value) order."""
     rows = (
-        _obs(spark, sf_dir)
+        observations_view(spark, sf_dir)
         .where((F.col("country_code") == country_code)
                & (F.col("indicator_code") == indicator_code))
         .select(F.year("time").cast("int").alias("yr"), F.col("value").cast("double"))
-        .dropDuplicates(["yr", "value"])
-        .orderBy("yr", "value")
         .collect()
     )
     if not rows:
         return None  # reference prints "No data" and skips the file
+    points = sorted({(r["yr"], r["value"]) for r in rows}, key=_spark_asc)
     img = line_chart(
-        [r["yr"] for r in rows],
-        [r["value"] for r in rows],
+        [yr for yr, _ in points],
+        [v for _, v in points],
         title=f"{indicator_code} TREND FOR {country_code}",
     )
     path = os.path.join(out_dir, f"{country_code}_{indicator_code}_trend.png")
@@ -301,17 +334,16 @@ def plot_country_trend(spark: SparkSession, sf_dir: str, out_dir: str,
 def plot_top_countries(spark: SparkSession, sf_dir: str, out_dir: str,
                        indicator_code: str) -> str | None:
     """Reference plot 2 (viz_utils.py:58-68): latest-year per-country SUM,
-    10 largest. The latest year is collected once and filtered on as a
-    literal; the top-k is a TakeOrderedAndProject."""
-    obs = _obs(spark, sf_dir)
-    year = obs.agg(F.max(F.year("time"))).collect()[0][0]
+    10 largest. The latest year is a session memo filtered on as a
+    literal; the top-k is one TakeOrderedAndProject over the per-(country,
+    indicator, year) totals view."""
+    year = _latest_year(spark, sf_dir)
     rows = (
-        obs.where((F.col("indicator_code") == indicator_code)
-                  & (F.year("time") == year))
-        .groupBy("country_code")
-        .agg(F.sum(F.col("value").cast("double")).alias("total"))
+        _totals(spark, sf_dir)
+        .where((F.col("indicator_code") == indicator_code) & (F.col("yr") == year))
         .orderBy(F.desc("total"), "country_code")
         .limit(10)
+        .select("country_code", "total")
         .collect()
     )
     if not rows:
@@ -330,13 +362,12 @@ def plot_top_countries(spark: SparkSession, sf_dir: str, out_dir: str,
 def plot_heatmap(spark: SparkSession, sf_dir: str, out_dir: str,
                  indicator_code: str) -> str | None:
     """Reference plot 3 (viz_utils.py:71-81): country x year sum matrix.
-    The pivot is done in Spark (long form, one shuffle); only the bounded
-    matrix reaches the driver."""
+    One filtered collect of the indicator's long-form rows of the totals
+    view; the driver pivots the bounded matrix."""
     rows = (
-        _obs(spark, sf_dir)
+        _totals(spark, sf_dir)
         .where(F.col("indicator_code") == indicator_code)
-        .groupBy("country_code", F.year("time").cast("int").alias("yr"))
-        .agg(F.sum(F.col("value").cast("double")).alias("total"))
+        .select("country_code", "yr", "total")
         .collect()
     )
     if not rows:

@@ -13,6 +13,23 @@ from eurostat_energy_etl_pipeline_spark.catalog import TABLES
 ROUND = 6
 
 
+def run_counting_jobs(spark, fn):
+    """``(fn(), n)``: the result and the number of Spark jobs ``fn`` ran,
+    counted with a job group and the status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group, False)
+    try:
+        out = fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for t in TABLES:

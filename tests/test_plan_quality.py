@@ -1268,3 +1268,89 @@ def test_q186_one_signature_pass_feeds_all_branches(spark, queries):
     assert "BroadcastHashJoin" in plan  # cluster map broadcast
     assert plan.count("SortMergeJoin") <= 2
     assert "CartesianProduct" not in plan
+
+
+# Plans that must not start reading the chatbot's insights view or the
+# charts' totals view by cache substitution (a cached plan silently
+# replaces an equal subtree of any later query).
+_NO_NEW_VIEW_READS = (
+    "q17_insights_trend",
+    "q17b_insights_full",
+    "q18_fastest_rising",
+    "q36_tfidf_search",
+    "q112_keyword_extract",
+    "q162_tfidf_keywords",
+    "q_dash_top10_latest",
+    "q_dash_between_top10",
+    "q_dash_heatmap",
+    "q_dash_pivot_types",
+    "q_dash_domains",
+    "q_dash_year_range",
+)
+
+
+def _cache_reads(spark, df) -> set[int]:
+    """Identities of the cache builders that ``df``'s optimized plan
+    reads, subqueries included."""
+    ident = spark._jvm.System.identityHashCode
+    plan = df._jdf.queryExecution().optimizedPlan()
+    subs = plan.subqueriesAll()
+    reads = set()
+    for p in [plan] + [subs.apply(i) for i in range(subs.size())]:
+        leaves = p.collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if leaf.getClass().getSimpleName() == "InMemoryRelation":
+                reads.add(ident(leaf.cacheBuilder()))
+    return reads
+
+
+def test_tail_op_views_replace_no_query_subtree(spark, tmp_path):
+    """With the insights and observation-totals views materialised, no
+    guarded query's optimized plan reads them; the plain insights table
+    does (the same rows). The fixture is read through a fresh path, so
+    every view and plan is new for this test."""
+    import os
+
+    from eurostat_energy_etl_pipeline_spark import catalog
+    from eurostat_energy_etl_pipeline_spark import plans as P
+    from eurostat_energy_etl_pipeline_spark.plans.insights import insights_table
+    from eurostat_energy_etl_pipeline_spark.rag.chatbot import answer_question
+    from eurostat_energy_etl_pipeline_spark.viz.charts import plot_top_countries
+
+    sf = str(tmp_path / "sf")
+    os.symlink(SF_DIR, sf)
+    key = (spark.sparkContext.applicationId, sf)
+    try:
+        assert answer_question(spark, sf, "energy consumption")["rows"]
+        assert plot_top_countries(spark, sf, str(tmp_path), "GEP")
+        views = {v: catalog._VIEW_CACHE[v][key] for v in ("insights", "observation_totals")}
+        ident = spark._jvm.System.identityHashCode
+        new = {
+            v: ident(df._jdf.queryExecution().withCachedData().cacheBuilder())
+            for v, df in views.items()
+        }
+        assert new["insights"] in _cache_reads(spark, insights_table(spark, sf))
+        queries = entry_mod.queries()
+        for name in _NO_NEW_VIEW_READS:
+            assert not _cache_reads(spark, queries[name](spark, sf)) & set(new.values()), name
+    finally:
+        for name in _NO_NEW_VIEW_READS:
+            P.drop_plan(name)
+        for memo in catalog._VIEW_CACHE.values():
+            view = memo.pop(key, None)
+            if view is not None:
+                view.unpersist()
+
+
+def test_id_partitioned_index_serves_search_and_q112_without_exchange(spark, queries):
+    """The cached posting lists are hash-partitioned by doc id: a search's
+    per-doc aggregate and q112's per-doc window read them exchange-free."""
+    from eurostat_energy_etl_pipeline_spark.rag import tfidf
+
+    index = tfidf.documents_index(spark, SF_DIR)
+    index.count()  # materialise the cache
+    for df in (tfidf.search(index, tfidf.SEARCH_QUERY), queries["q112_keyword_extract"](spark, SF_DIR)):
+        plan = plan_of(df)
+        assert "InMemoryTableScan" in plan, plan
+        assert "+- Exchange" not in plan.split("InMemoryRelation", 1)[0], plan

@@ -148,3 +148,78 @@ def test_intent_answers_reuse_one_plan(spark, sf_dir, monkeypatch):
     assert builds == [1]
     assert answers[0]["mode"] == "intent" and answers[0]["rows"] == want
     assert answers[1] == answers[0] and answers[2] == answers[0]
+
+
+def _insights_corpus(spark, sf_dir):
+    from pyspark.sql import functions as F
+
+    from eurostat_energy_etl_pipeline_spark.plans.insights import insights_table
+
+    return insights_table(spark, sf_dir).select(
+        F.xxhash64("geo", "indicator").alias("doc_id"),
+        F.col("insight_text").alias("text"),
+    )
+
+
+_TAIL_QUESTIONS = {
+    "out_of_vocabulary": "zzz qqq unrelated tokens",
+    "repeated_term": "energy energy consumption energy consumption",
+    "stopwords_only": "the and of is",
+    "tied_scores": "energy",
+}
+
+
+@pytest.mark.parametrize("case", list(_TAIL_QUESTIONS))
+def test_semantic_answer_runs_three_jobs_and_equals_one_shot(spark, sf_dir, case):
+    """On a warm session a semantic answer is at most three Spark jobs
+    (the query's idfs, the top-k, the k texts) and returns exactly the
+    one-shot build + search rows."""
+    from tests.harness import run_counting_jobs
+
+    from eurostat_energy_etl_pipeline_spark.rag import chatbot
+
+    question = _TAIL_QUESTIONS[case]
+    chatbot.answer_question(spark, sf_dir, _SEMANTIC_Q)  # builds the session views
+    ans, jobs = run_counting_jobs(
+        spark, lambda: chatbot.answer_question(spark, sf_dir, question)
+    )
+    assert jobs <= 3
+    want = [r.asDict() for r in semantic_search(spark, _insights_corpus(spark, sf_dir), question).collect()]
+    assert ans["mode"] == "semantic" and ans["rows"] == want
+    assert bool(want) == (case in ("repeated_term", "tied_scores"))
+    if case == "tied_scores":
+        wider = semantic_search(spark, _insights_corpus(spark, sf_dir), question, k=6).collect()
+        assert wider[4]["score"] == wider[5]["score"]  # the tie straddles the cut
+
+
+_TOKENIZER_CASES = [
+    "household\xa0energy use",
+    " rising gep",
+    "\u2003rising gep",
+    "transport\x1fenergy",
+    "final\tenergy\tconsumption",
+    "final\x0benergy consumption",
+    "  energy  use  ",
+    "\x1cgep\x1d use",
+    "energy\u3000use and\u2028trends",
+    "\xc9nergie \xdcBER Use",
+]
+
+
+@pytest.mark.parametrize("text", _TOKENIZER_CASES)
+def test_query_tokenizers_split_as_the_corpus_does(spark, text):
+    """The driver-side query terms of tf-idf and BM25 are what Spark's
+    corpus-side `_terms` / `_unigrams` make of the same string."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from eurostat_energy_etl_pipeline_spark.rag import bm25, tfidf
+
+    row = (
+        spark.createDataFrame([(text,)], "t string")
+        .select(tfidf._terms(F.col("t")).alias("terms"), bm25._unigrams(F.col("t")).alias("uni"))
+        .first()
+    )
+    assert tfidf._query_terms(text) == {t: float(c) for t, c in Counter(row["terms"]).items()}
+    assert bm25._query_unigrams(text) == list(dict.fromkeys(row["uni"]))

@@ -193,3 +193,103 @@ def test_polyline_matches_per_segment_drawer_at_edges_and_ties():
             _polyline(got, xs, ys, SERIES, thick=thick)
             _reference_polyline(want, xs, ys, SERIES, thick=thick)
             assert (decode_png(encode_png(got)) == decode_png(encode_png(want))).all()
+
+
+# ------------------------------------------------------- one job per chart
+# The chart plans before the totals view, kept as the reference for rows.
+def _reference_trend(spark, sf_dir, geo, ind):
+    from pyspark.sql import functions as F
+
+    from eurostat_energy_etl_pipeline_spark.catalog import observations_view
+
+    rows = (
+        observations_view(spark, sf_dir)
+        .where((F.col("country_code") == geo) & (F.col("indicator_code") == ind))
+        .select(F.year("time").cast("int").alias("yr"), F.col("value").cast("double"))
+        .dropDuplicates(["yr", "value"])
+        .orderBy("yr", "value")
+        .collect()
+    )
+    return [(r["yr"], r["value"]) for r in rows]
+
+
+def _reference_top(spark, sf_dir, ind):
+    from pyspark.sql import functions as F
+
+    from eurostat_energy_etl_pipeline_spark.catalog import observations_view
+
+    obs = observations_view(spark, sf_dir)
+    year = obs.agg(F.max(F.year("time"))).collect()[0][0]
+    rows = (
+        obs.where((F.col("indicator_code") == ind) & (F.year("time") == year))
+        .groupBy("country_code")
+        .agg(F.sum(F.col("value").cast("double")).alias("total"))
+        .orderBy(F.desc("total"), "country_code")
+        .limit(10)
+        .collect()
+    )
+    return year, [(r["country_code"], r["total"]) for r in rows]
+
+
+def _reference_heatmap(spark, sf_dir, ind):
+    from pyspark.sql import functions as F
+
+    from eurostat_energy_etl_pipeline_spark.catalog import observations_view
+
+    rows = (
+        observations_view(spark, sf_dir)
+        .where(F.col("indicator_code") == ind)
+        .groupBy("country_code", F.year("time").cast("int").alias("yr"))
+        .agg(F.sum(F.col("value").cast("double")).alias("total"))
+        .collect()
+    )
+    return {(r["country_code"], r["yr"]): r["total"] for r in rows}
+
+
+@pytest.mark.parametrize(
+    "geo,ind", [("NATION_7", "GEP"), ("NATION_3", "FC_E"), ("NATION_0", "FC_OTH_HH_E")]
+)
+def test_each_chart_runs_one_job_with_todays_rows(spark, sf_dir, tmp_path, monkeypatch, geo, ind):
+    from tests.harness import run_counting_jobs
+
+    from eurostat_energy_etl_pipeline_spark.viz import charts
+
+    out = str(tmp_path)
+    generate_all(spark, sf_dir, out, geo, ind)  # builds the session state
+    drawn = {}
+
+    def recording(name):
+        real = getattr(charts, name)
+
+        def draw(*args, **kwargs):
+            drawn[name] = args
+            return real(*args, **kwargs)
+
+        return draw
+
+    for name in ("line_chart", "barh_chart", "heatmap_chart"):
+        monkeypatch.setattr(charts, name, recording(name))
+
+    _, jobs = run_counting_jobs(spark, lambda: charts.plot_country_trend(spark, sf_dir, out, geo, ind))
+    assert jobs == 1
+    xs, ys = drawn["line_chart"]
+    assert list(zip(xs, ys)) == _reference_trend(spark, sf_dir, geo, ind)
+
+    path, jobs = run_counting_jobs(spark, lambda: charts.plot_top_countries(spark, sf_dir, out, ind))
+    assert jobs == 1
+    year, want = _reference_top(spark, sf_dir, ind)
+    assert path.endswith(f"top_10_{ind}_{year}.png")
+    assert list(zip(*drawn["barh_chart"])) == want
+
+    _, jobs = run_counting_jobs(spark, lambda: charts.plot_heatmap(spark, sf_dir, out, ind))
+    assert jobs == 1
+    countries, years, mat = drawn["heatmap_chart"]
+    want = _reference_heatmap(spark, sf_dir, ind)
+    assert countries == sorted({c for c, _ in want}) and years == sorted({y for _, y in want})
+    got = {
+        (c, y): mat[i, j]
+        for i, c in enumerate(countries)
+        for j, y in enumerate(years)
+        if np.isfinite(mat[i, j])
+    }
+    assert got == want

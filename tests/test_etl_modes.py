@@ -173,6 +173,60 @@ def test_merge_stages_only_the_surviving_rows(spark, tmp_path, monkeypatch):
     assert got == {"C0": 0.0, "C1": 1.0, "C2": 2.0, "C3": 3.0, "C4": 4.0, "C9": 9.0}
 
 
+def test_merge_lookups_broadcast_the_batch_without_a_shuffle(
+    spark, tmp_path, monkeypatch
+):
+    """The survivors' partition and key lookups broadcast the staged
+    batch as it is: no exchange but the broadcasts and no aggregate
+    anywhere in the survivors' plan (a de-duplicating shuffle there also
+    drew a runtime bloom filter over the warehouse)."""
+    import re
+    from contextlib import contextmanager
+
+    from eurostat_energy_etl_pipeline_spark.etl import job
+
+    wh = str(tmp_path / "obs")
+    run_etl(spark, [_batch(spark, n=20)], wh, "full-refresh")
+    plans = []
+    real = job.staged
+
+    @contextmanager
+    def recording(df):
+        with real(df) as out:
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+            yield out
+
+    monkeypatch.setattr(job, "staged", recording)
+    run_etl(spark, [_batch(spark, n=20).where("country_code < 'C5'")], wh, "merge")
+    survivors = plans[1]
+    assert "LeftAnti" in survivors and "LeftSemi" in survivors, survivors
+    assert "isFinalPlan=true" in survivors, survivors
+    assert "HashAggregate" not in survivors, survivors
+    assert not re.search(r"(?<!Broadcast)Exchange|ShuffleQueryStage", survivors), survivors
+
+
+def test_merge_keeps_both_rows_of_a_key_the_batch_carries_twice(spark, tmp_path):
+    """A batch with two values for one key replaces the stored row with
+    both (cleaning drops only exact duplicates), as before the key lookup
+    stopped de-duplicating."""
+    wh = str(tmp_path / "obs")
+    run_etl(spark, [_batch(spark)], wh, "full-refresh")
+    base = _batch(spark).where("country_code = 'C1'").collect()[0].asDict()
+    delta = spark.createDataFrame(
+        [Row(**{**base, "value": 100.0}), Row(**{**base, "value": 200.0})]
+    )
+    assert run_etl(spark, [delta], wh, "merge") == 2
+    got = sorted((r["country_code"], r["value"]) for r in read_warehouse(spark, wh).collect())
+    assert got == [
+        ("C0", 0.0),
+        ("C1", 100.0),
+        ("C1", 200.0),
+        ("C2", 2.0),
+        ("C3", 3.0),
+        ("C4", 4.0),
+    ]
+
+
 def test_merge_null_unit_key_is_null_safe(spark, tmp_path):
     """A NULL unit_code survives cleaning (FIXTURES §3.3); merging the same
     NULL-unit key must UPDATE that row, not duplicate it."""

@@ -202,6 +202,66 @@ def test_decode_matches_python_kernel_on_edge_labels(spark):
     assert {"ZZ", "Thousand {tonnes}\x1fof oil equivalent", "Åland 😀 {}"} <= names
 
 
+def _seeded_cube(seed: int, cells: int) -> dict:
+    """A sparse 4-dimension cube of `cells` values at seeded positions:
+    4 indicators (one outside the default allow-list) x 2 units (list-form
+    index) x 500 geos (every third one unlabelled) x 20 years."""
+    import random
+
+    rng = random.Random(seed)
+    inds, units = ["GEP", "FC_E", "FC_IND_E", "XXX"], ["GWH", "KTOE"]
+    geos = [f"G{i:03d}" for i in range(500)]
+    years = [str(1990 + i) for i in range(20)]
+    flat = sorted(rng.sample(range(len(inds) * len(units) * len(geos) * len(years)), cells))
+
+    def dim(codes, labelled):
+        return {
+            "category": {
+                "index": {c: i for i, c in enumerate(codes)},
+                "label": {c: f"{c} label" for i, c in enumerate(codes) if labelled(i)},
+            }
+        }
+
+    dims = {
+        "nrg_bal": dim(inds, lambda i: True),
+        "unit": {"category": {"index": units, "label": {u: u.lower() for u in units}}},
+        "geo": dim(geos, lambda i: i % 3),
+        "time": dim(years, lambda i: True),
+    }
+    return {
+        "id": list(dims),
+        "size": [len(inds), len(units), len(geos), len(years)],
+        "dimension": dims,
+        "value": {str(i): round(rng.uniform(0.0, 10_000.0), 3) for i in flat},
+    }
+
+
+def test_cells_decode_in_executor_tasks_without_python(spark):
+    """The cells reach the plan as JVM rows: no LocalRelation for the
+    optimizer to fold the unravel into, no Python worker in the lineage,
+    one scan task per core. A 64k-cell cube (above the old source's 50k
+    one-slice bound) decodes to exactly the pure-Python kernel's rows."""
+    from eurostat_energy_etl_pipeline_spark.sources.jsonstat_datasource import (
+        decode_document,
+    )
+
+    cube = _seeded_cube(seed=64, cells=64_000)
+    df = decode_jsonstat(spark, cube, "nrg_cb_e")
+    qe = df._jdf.queryExecution()
+    assert "LocalRelation" not in qe.optimizedPlan().toString()
+    physical = qe.executedPlan().toString()
+    assert "LocalTableScan" not in physical and "Python" not in physical, physical
+    rdd = qe.toRdd()
+    assert "PythonRDD" not in rdd.toDebugString()
+    assert rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    got = sorted(tuple(r) for r in df.collect())
+    want = sorted(decode_document(cube, "nrg_cb_e"))
+    assert len(want) == sum(
+        1 for k in cube["value"] if int(k) < 3 * 2 * 500 * 20
+    )
+    assert got == want
+
+
 def test_datasource_invalid_payload_yields_empty(spark, tmp_path):
     from eurostat_energy_etl_pipeline_spark.sources.jsonstat_datasource import (
         register_jsonstat_source,

@@ -326,6 +326,43 @@ def test_staged_releases_its_blocks_on_exit(spark):
     assert _persistent_rdd_ids(spark) - before == set()
 
 
+def test_ingest_load_persists_and_leaves_nothing_outside_the_warehouse(
+    spark, tmp_path, monkeypatch
+):
+    """A decoded cube loaded by append and then merge leaves no persistent
+    RDD and no file anywhere but the warehouse: the cell source owns no
+    resource and the loads' staging is released."""
+    import tempfile
+
+    from eurostat_energy_etl_pipeline_spark.etl.job import read_warehouse, run_etl
+    from eurostat_energy_etl_pipeline_spark.sources.jsonstat import (
+        GOLDEN_FIXTURE,
+        decode_jsonstat,
+    )
+
+    work = tmp_path / "cwd"
+    work.mkdir()
+    monkeypatch.chdir(work)
+    wh = str(tmp_path / "warehouse")
+
+    def outside_the_warehouse():
+        def tree(root):
+            return {os.path.join(d, n) for d, ds, fs in os.walk(root) for n in ds + fs}
+
+        return (
+            tree(tmp_path) - tree(wh) - {wh},
+            tree(spark.sparkContext._temp_dir),
+            set(os.listdir(tempfile.gettempdir())),
+        )
+
+    before = _persistent_rdd_ids(spark), outside_the_warehouse()
+    for mode in ("append", "merge"):
+        df = decode_jsonstat(spark, GOLDEN_FIXTURE, "nrg_cb_e")
+        assert run_etl(spark, [df], wh, mode) == 5
+    assert read_warehouse(spark, wh).count() == 5
+    assert (_persistent_rdd_ids(spark), outside_the_warehouse()) == before
+
+
 def test_session_memo_builds_once_under_concurrency(spark):
     """More clients than cores miss a slow build together: it runs once
     and every client gets the same value."""

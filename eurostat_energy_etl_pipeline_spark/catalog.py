@@ -26,6 +26,8 @@ from typing import Callable, Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from eurostat_energy_etl_pipeline_spark.functions.parallelism import widen_if_narrow
+
 TABLES = (
     "region",
     "nation",
@@ -111,6 +113,7 @@ class TableCatalog(Mapping):
         self._spark = spark
         self._sf_dir = sf_dir
         self._resolved: dict[str, DataFrame] = {}
+        self._wide: dict[str, DataFrame] = {}
 
     def __getitem__(self, name: str) -> DataFrame:
         df = self._resolved.get(name)
@@ -128,6 +131,19 @@ class TableCatalog(Mapping):
                     f"{self._sf_dir}/{name}.parquet: {exc}"
                 ) from exc
             self._resolved[name] = df
+        return df
+
+    def wide(self, name: str) -> DataFrame:
+        """Table `name` for compute-bound plans: its handle repartitioned to
+        the session's defaultParallelism iff its scan is narrower (a
+        single-row-group parquet file is one scan partition). The width is
+        probed once per table and the DataFrame memoized, so every plan in
+        the session shares one logical plan for it. Plans that stay
+        I/O-bound read the plain handle (`catalog[name]`) and gain no
+        exchange."""
+        df = self._wide.get(name)
+        if df is None:
+            df = self._wide.setdefault(name, widen_if_narrow(self[name]))
         return df
 
     def __iter__(self) -> Iterator[str]:

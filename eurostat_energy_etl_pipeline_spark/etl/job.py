@@ -211,7 +211,11 @@ def write_warehouse(df: DataFrame, warehouse_dir: str, mode: str) -> None:
     and ONLY the (dataset_code, year) partitions present in the batch are
     rewritten (`partitionOverwriteMode=dynamic`) — at 100 TB a daily batch
     touches a handful of year partitions, so the rewrite cost is bounded by
-    the batch's partition footprint, not the table size. Production tables
+    the batch's partition footprint, not the table size. The read is not:
+    the `left_semi` broadcast join on (dataset_code, year) prunes no files
+    (the scan gets no partition filter and no dynamic partition pruning),
+    so the survivors' scan reads every warehouse partition and grows with
+    the table; only the rows it keeps are the footprint's. Production tables
     would use a transactional format (Delta/Iceberg MERGE = new files +
     metadata swap); this is the same plan shape over plain parquet, with the
     affected-partition survivors staged (`plans.staged`, released after the

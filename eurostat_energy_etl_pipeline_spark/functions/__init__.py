@@ -17,7 +17,6 @@ from eurostat_energy_etl_pipeline_spark.functions.domain import (
 from eurostat_energy_etl_pipeline_spark.functions.parallelism import (
     keyed_compute_width,
     widen_if_narrow,
-    widen_keyed,
 )
 from eurostat_energy_etl_pipeline_spark.functions.presentation import (
     ordered_output,
@@ -34,7 +33,6 @@ __all__ = [
     "rolling_mean_min_periods",
     "rolling_std_min_periods",
     "widen_if_narrow",
-    "widen_keyed",
     "keyed_compute_width",
     "growth_pct",
     "indicator_display_name",

@@ -14,6 +14,10 @@ physical plan's partitioning (no job runs); the exchange it may add costs
 one pass over the input — trivial next to the per-row compute it unlocks.
 At warehouse scale the input is already hundreds of partitions wide and the
 guard is a no-op, so this never adds a shuffle to the 100 TB plan.
+
+The catalog owns table width: plans read a widened table through
+`TableCatalog.wide(name)`, which applies this guard once per table and
+session. Operators, whose inputs can be any DataFrame, guard their own.
 """
 
 from __future__ import annotations
@@ -21,22 +25,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def widen_if_narrow(df: DataFrame, target: int | None = None) -> DataFrame:
-    """Repartition `df` to `target` partitions (default: the session's
-    defaultParallelism) iff it currently has fewer.
+def widen_if_narrow(df: DataFrame) -> DataFrame:
+    """Repartition `df` to the session's defaultParallelism iff it
+    currently has fewer partitions.
 
     Contract: call this on SCAN-SIDE inputs only (a bare table read plus
-    narrow projections/filters) — which is how every call site in this
-    repo uses it. There the `df.rdd.getNumPartitions()` probe is pure
-    planning (file listing / split arithmetic, no job). On a plan that
-    already contains a shuffle, converting to an RDD under AQE can force
-    materialization of upstream query stages, and the probed partition
-    count may differ from the AQE-coalesced final partitioning — so this
-    is NOT a general-purpose width guard for arbitrary mid-plan
-    DataFrames."""
-    sc = df.sparkSession.sparkContext
-    if target is None:
-        target = sc.defaultParallelism
+    narrow projections/filters). Plans get that by construction through
+    `TableCatalog.wide`, which widens only catalog tables; an operator
+    guarding its own input must pass one. There the
+    `df.rdd.getNumPartitions()` probe is pure planning (file listing /
+    split arithmetic, no job). On a plan that already contains a shuffle,
+    converting to an RDD under AQE can force materialization of upstream
+    query stages, and the probed partition count may differ from the
+    AQE-coalesced final partitioning — so this is NOT a general-purpose
+    width guard for arbitrary mid-plan DataFrames."""
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
         current = df.rdd.getNumPartitions()
     except Exception:
@@ -72,15 +75,3 @@ def keyed_compute_width(df: DataFrame) -> int:
         width = cores
     return max(width, cores)
 
-
-def widen_keyed(df: DataFrame, *keys: str) -> DataFrame:
-    """``repartition(keyed_compute_width(df), *keys)`` — pre-partition a
-    CPU-bound keyed stage's input on its exact group/join key at compute
-    width. The downstream groupBy/grouped-map requirement is satisfied
-    by this partitioning, so the plan gets the SAME exchange count —
-    only wider where the static shuffle width would starve the stage."""
-    from pyspark.sql import functions as F
-
-    return df.repartition(
-        keyed_compute_width(df), *[F.col(k) for k in keys]
-    )

@@ -17,7 +17,6 @@ from eurostat_energy_etl_pipeline_spark.functions import (
     portable_round,
     portable_round_sql,
     presentation_sort,
-    widen_if_narrow,
 )
 from eurostat_energy_etl_pipeline_spark.operators import text as T
 from eurostat_energy_etl_pipeline_spark.operators.chunking import chunk_documents
@@ -84,7 +83,7 @@ def q51(spark, sf_dir):
     t = load_tables(spark, sf_dir)
     p = F.col("props")
     return (
-        widen_if_narrow(t["events"])
+        t.wide("events")
         .groupBy("event_type")
         .agg(
             F.sum(T.pattern_count(p, T.NUMSEQ_PATTERN)).alias("numseqs"),
@@ -166,7 +165,7 @@ def q53(spark, sf_dir):
     `ntile OVER (ORDER BY ...)`, which would move every row through one
     task — row-identical by construction, scales linearly."""
     t = load_tables(spark, sf_dir)
-    scored = widen_if_narrow(t["documents"]).select(
+    scored = t.wide("documents").select(
         "doc_id", T.quality_score(F.col("text")).alias("quality")
     )
     return (
@@ -382,7 +381,7 @@ def q58(spark, sf_dir):
     grams = token_shingles(F.col("text"), 3)
     rep = 1.0 - F.size(F.array_distinct(grams)).cast("double") / F.size(grams)
     return (
-        widen_if_narrow(t["documents"])
+        t.wide("documents")
         .select("lang", rep.alias("rep"))
         .groupBy("lang")
         .agg(
@@ -503,7 +502,7 @@ def q61(spark, sf_dir):
     from pyspark.sql.window import Window
 
     t = load_tables(spark, sf_dir)
-    scored = widen_if_narrow(t["documents"]).select(
+    scored = t.wide("documents").select(
         "doc_id",
         "lang",
         F.expr("floor(n_chars / 100.0)").cast("int").alias("bucket"),
@@ -696,7 +695,7 @@ def q66(spark, sf_dir):
 
     t = load_tables(spark, sf_dir)
     tok = (
-        widen_if_narrow(t["documents"])
+        t.wide("documents")
         .select(
             "doc_id", "lang", F.explode(whitespace_tokens(F.col("text"))).alias("tk")
         )
@@ -861,7 +860,7 @@ def q72(spark, sf_dir):
     codes, never text. The oracle runs verbatim on both engines."""
     t = load_tables(spark, sf_dir)
     return (
-        widen_if_narrow(t["documents"])
+        t.wide("documents")
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -954,7 +953,7 @@ def q78(spark, sf_dir):
         lambda x: (x != "") & ~F.array_contains(stop, x),
     )
     top = (
-        widen_if_narrow(t["documents"])
+        t.wide("documents")
         .select(F.explode(toks).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -1039,7 +1038,7 @@ def q82(spark, sf_dir):
         lambda a, b: F.concat_ws(" ", a, b),
     )
     bg = (
-        widen_if_narrow(t["documents"])
+        t.wide("documents")
         .where(n >= 2)
         .select("doc_id", "lang", F.explode(bigrams).alias("bigram"))
         # The prefix key is never null (concat_ws output), but the
@@ -1127,7 +1126,7 @@ def q89(spark, sf_dir):
 
     t = load_tables(spark, sf_dir)
     tok = (
-        widen_if_narrow(t["documents"])
+        t.wide("documents")
         .select(F.explode(whitespace_tokens(F.col("text"))).alias("w"))
         .where(F.length("w") >= 2)
     )
@@ -1208,7 +1207,7 @@ def q93(spark, sf_dir):
 
     t = load_tables(spark, sf_dir)
     return presentation_sort(
-        train_bpe(widen_if_narrow(t["documents"]), n_merges=5), "rank"
+        train_bpe(t.wide("documents"), n_merges=5), "rank"
     )
 
 
@@ -1281,7 +1280,7 @@ def q98(spark, sf_dir):
     )
 
     t = load_tables(spark, sf_dir)
-    docs = widen_if_narrow(t["documents"])
+    docs = t.wide("documents")
     stats = fertility_table(docs, _BPE_APPLY_RULES)
     return stats.select(
         "doc_id",
@@ -1398,7 +1397,7 @@ def q96(spark, sf_dir):
     )
 
     t = load_tables(spark, sf_dir)
-    wf = word_type_table(widen_if_narrow(t["documents"]))
+    wf = word_type_table(t.wide("documents"))
     totals = wf.agg(F.sum("m").cast("long").alias("t"))
     cum = global_prefix_sum(
         wf.withColumn("negm", -F.col("m")), ["negm", "w"], "m", "cum"
@@ -1450,7 +1449,7 @@ def q100(spark, sf_dir):
 
     t = load_tables(spark, sf_dir)
     return weighted_sample_topk(
-        widen_if_narrow(t["documents"]).select("doc_id", "n_chars"),
+        t.wide("documents").select("doc_id", "n_chars"),
         "doc_id",
         "n_chars",
         k=25,
@@ -1550,7 +1549,7 @@ def q102(spark, sf_dir):
     # cluster scale the persist spills MEMORY_AND_DISK and degrades
     # gracefully to the recompute it replaces if cache is short.
     docs = pin(
-        widen_if_narrow(t["documents"]).select(
+        t.wide("documents").select(
             "doc_id",
             "lang",
             toks.alias("tk"),
@@ -1716,7 +1715,7 @@ def q110(spark, sf_dir):
     keep = cc.where(F.col("id") == F.col("component")).select(
         F.col("id").alias("doc_id"), F.lit(1).alias("_keep")
     )
-    tok = widen_if_narrow(docs).select(
+    tok = t.wide("documents").select(
         "doc_id", "source", T.token_count(F.col("text")).alias("n_tokens")
     )
     flagged = tok.join(keep, "doc_id", "left")
@@ -2006,7 +2005,6 @@ def q113(spark, sf_dir):
         whitespace_tokens,
     )
 
-    docs = load_tables(spark, sf_dir)["documents"]
 
     def bucket(col, i):
         h = F.conv(
@@ -2014,7 +2012,7 @@ def q113(spark, sf_dir):
         ).cast("long")
         return F.pmod(h, F.lit(_CMS_W))
 
-    tok = widen_if_narrow(docs).select(
+    tok = load_tables(spark, sf_dir).wide("documents").select(
         F.explode(
             F.filter(whitespace_tokens(F.col("text")), lambda x: x != "")
         ).alias("tk")
@@ -2124,9 +2122,10 @@ def q115(spark, sf_dir):
     )
     from eurostat_energy_etl_pipeline_spark.operators.text import fingerprint
 
-    docs = load_tables(spark, sf_dir)["documents"]
+    t = load_tables(spark, sf_dir)
+    docs = t["documents"]
     kept = (
-        widen_if_narrow(docs)
+        t.wide("documents")
         .select(
             "doc_id",
             "lang",
@@ -2222,9 +2221,8 @@ def q116(spark, sf_dir):
         whitespace_tokens,
     )
 
-    docs = load_tables(spark, sf_dir)["documents"]
     tok = (
-        widen_if_narrow(docs)
+        load_tables(spark, sf_dir).wide("documents")
         .select(
             F.explode(
                 F.filter(whitespace_tokens(F.col("text")), lambda x: x != "")
@@ -2294,14 +2292,14 @@ def q117(spark, sf_dir):
     bucketed-layout co-located join, `etl/bucketing.py`), content
     compared as md5 so the wide text column is pruned before the
     exchange (the q19/q23 discipline)."""
-    docs = load_tables(spark, sf_dir)["documents"]
+    t = load_tables(spark, sf_dir)
     old = (
-        widen_if_narrow(docs)
+        t.wide("documents")
         .where(F.col("doc_id") % 10 != 0)
         .select("doc_id", "source", F.md5("text").alias("h"))
     )
     new = (
-        widen_if_narrow(docs)
+        t.wide("documents")
         .where(F.col("doc_id") % 7 != 0)
         .select(
             "doc_id",
@@ -2390,14 +2388,13 @@ def q119(spark, sf_dir):
         global_row_number,
     )
 
-    docs = load_tables(spark, sf_dir)["documents"]
     # r15: the scored table feeds THREE consumers in the final plan (the
     # global-rank side, the source-local window side, and the n_all
     # broadcast) plus the ranking kernel's build-time boundary sample —
     # each replaying the regex quality score over the whole corpus. Pin
     # it (text-free: doc_id, source, q), guide §1.2/§5.
     scored = pin(
-        widen_if_narrow(docs).select(
+        load_tables(spark, sf_dir).wide("documents").select(
             "doc_id", "source", T.quality_score(F.col("text")).alias("q")
         )
     )
@@ -2622,8 +2619,7 @@ def q122(spark, sf_dir):
         whitespace_tokens,
     )
 
-    docs = load_tables(spark, sf_dir)["documents"]
-    tok = widen_if_narrow(docs).select(
+    tok = load_tables(spark, sf_dir).wide("documents").select(
         F.filter(whitespace_tokens(F.col("text")), lambda x: x != "").alias(
             "tk"
         )
@@ -2721,8 +2717,7 @@ def q125(spark, sf_dir):
         token_shingles,
     )
 
-    docs = load_tables(spark, sf_dir)["documents"]
-    sh = widen_if_narrow(docs).select(
+    sh = load_tables(spark, sf_dir).wide("documents").select(
         "doc_id",
         F.explode(
             F.array_distinct(token_shingles(F.col("text"), 3))
@@ -2811,9 +2806,8 @@ def q128(spark, sf_dir):
         whitespace_tokens,
     )
 
-    docs = load_tables(spark, sf_dir)["documents"]
     tok = (
-        widen_if_narrow(docs)
+        load_tables(spark, sf_dir).wide("documents")
         .select(
             (F.col("doc_id") % 2).alias("half"),
             F.explode(
@@ -3040,9 +3034,8 @@ def q136(spark, sf_dir):
     )
 
     m = _HLL_M
-    docs = load_tables(spark, sf_dir)["documents"]
     tok = (
-        widen_if_narrow(docs)
+        load_tables(spark, sf_dir).wide("documents")
         .select(
             F.explode(
                 F.filter(whitespace_tokens(F.col("text")), lambda x: x != "")
@@ -3156,7 +3149,6 @@ def q139(spark, sf_dir):
     cannot silently drop one (the r9 ADVICE aliasing classes); sums
     fold as DECIMAL(38,0) and are compared as strings so no engine's
     integer width matters."""
-    docs = load_tables(spark, sf_dir)["documents"]
 
     def field(c):
         # injective field rendering (r9 ADVICE): NULL gets an explicit
@@ -3180,7 +3172,7 @@ def q139(spark, sf_dir):
     )
     h = F.conv(F.substring(F.md5(canon), 1, 15), 16, 10).cast("long")
     return (
-        widen_if_narrow(docs)
+        load_tables(spark, sf_dir).wide("documents")
         .select("source", h.alias("h"))
         .groupBy("source")
         .agg(
@@ -3262,8 +3254,8 @@ def q141(spark, sf_dir):
         duplicated_span_profile,
     )
 
-    docs = load_tables(spark, sf_dir)["documents"]
-    return duplicated_span_profile(widen_if_narrow(docs), k=8, min_count=2)
+    t = load_tables(spark, sf_dir)
+    return duplicated_span_profile(t.wide("documents"), k=8, min_count=2)
 
 
 @query(
@@ -3336,11 +3328,11 @@ def q144(spark, sf_dir):
         winnowing_fingerprints,
     )
 
-    docs = load_tables(spark, sf_dir)["documents"]
+    t = load_tables(spark, sf_dir)
     # the selection subtree (explode + window + distinct) feeds BOTH the
     # per-doc rollup and the sharing count: pin it (plans.pin lifetime
     # contract) so it executes once per measurement, not twice
-    sel = pin(winnowing_fingerprints(widen_if_narrow(docs), k=4, w=4))
+    sel = pin(winnowing_fingerprints(t.wide("documents"), k=4, w=4))
     per_doc = sel.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_fps"),
         F.countDistinct("gh").cast("long").alias("n_hashes"),
@@ -3488,8 +3480,7 @@ def q145(spark, sf_dir):
         repetition_profile,
     )
 
-    docs = load_tables(spark, sf_dir)["documents"]
-    return repetition_profile(widen_if_narrow(docs))
+    return repetition_profile(load_tables(spark, sf_dir).wide("documents"))
 
 
 @query(
@@ -3544,10 +3535,9 @@ def q146(spark, sf_dir):
     in both engines, gridded to 1e-12, and summed as DECIMAL
     (order-independent — the q126 recipe); MI and H(lang|source) are
     then derived from the three entropy sums with single IEEE ops."""
-    docs = load_tables(spark, sf_dir)["documents"]
     dec = "decimal(30,12)"
     cells = (
-        widen_if_narrow(docs)
+        load_tables(spark, sf_dir).wide("documents")
         .groupBy("lang", "source")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -3643,7 +3633,7 @@ def q148(spark, sf_dir):
         quality_score,
     )
 
-    docs = widen_if_narrow(load_tables(spark, sf_dir)["documents"])
+    docs = load_tables(spark, sf_dir).wide("documents")
     # r15: `s` feeds BOTH ranking sides in the final plan (plus the two
     # kernels' build-time boundary samples), each replaying the regex
     # quality score over the whole corpus. Pin it (text-free 4-column
@@ -3786,8 +3776,8 @@ def q156(spark, sf_dir):
         cut_duplicated_spans,
     )
 
-    docs = load_tables(spark, sf_dir)["documents"]
-    out = cut_duplicated_spans(widen_if_narrow(docs), k=8, min_count=2)
+    t = load_tables(spark, sf_dir)
+    out = cut_duplicated_spans(t.wide("documents"), k=8, min_count=2)
     return out.select(
         "doc_id",
         "source",
@@ -3835,8 +3825,8 @@ def q157(spark, sf_dir):
         cut_duplicated_spans,
     )
 
-    docs = load_tables(spark, sf_dir)["documents"]
-    cut = cut_duplicated_spans(widen_if_narrow(docs), k=8, min_count=2)
+    t = load_tables(spark, sf_dir)
+    cut = cut_duplicated_spans(t.wide("documents"), k=8, min_count=2)
     kept_tokens = F.sum("tokens_after")
     return (
         cut.groupBy("source")
@@ -4030,10 +4020,9 @@ def q183(spark, sf_dir):
         whitespace_tokens,
     )
 
-    docs = load_tables(spark, sf_dir)["documents"]
     tk = F.filter(whitespace_tokens(F.col("text")), lambda x: x != "")
     t = (
-        widen_if_narrow(docs)
+        load_tables(spark, sf_dir).wide("documents")
         .select("doc_id", "source", tk.alias("tk"))
         .where(F.size("tk") > 0)
         .select(
@@ -4315,7 +4304,7 @@ def q188(spark, sf_dir):
     two documents scans total (corpus grams + bench grams), one
     aggregate, and text never crosses any exchange."""
     t = load_tables(spark, sf_dir)
-    docs = widen_if_narrow(t["documents"])
+    docs = t.wide("documents")
     from eurostat_energy_etl_pipeline_spark.operators.dedup import (
         token_shingles,
     )
@@ -4417,7 +4406,6 @@ def q194(spark, sf_dir):
     harder than the operator (it materializes |A ∩ B| pair rows), which
     is the point: exact ground truth certifying the set-algebra path.
     """
-    docs = load_tables(spark, sf_dir)["documents"]
     from eurostat_energy_etl_pipeline_spark.operators.dedup import (
         doc_shingle_keys,
     )
@@ -4427,7 +4415,7 @@ def q194(spark, sf_dir):
     # each branch re-scans and re-shingles the corpus (two full passes)
     sh = pin(
         doc_shingle_keys(
-            widen_if_narrow(docs), k=3, id_col="source"
+            load_tables(spark, sf_dir).wide("documents"), k=3, id_col="source"
         ).distinct()
     )
     tot = sh.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
@@ -4484,14 +4472,13 @@ def q198(spark, sf_dir):
     sets stay |sources|-bounded; the pair tables are |sources|^2 rows
     (broadcastable); only the batch is re-shingled — yesterday's
     corpus is never re-scanned."""
-    docs = load_tables(spark, sf_dir)["documents"]
     from eurostat_energy_etl_pipeline_spark.operators.dedup import (
         doc_shingle_keys,
     )
     from eurostat_energy_etl_pipeline_spark.plans import at_rest
 
     wide = pin(
-        widen_if_narrow(docs).select("doc_id", "source", "text")
+        load_tables(spark, sf_dir).wide("documents").select("doc_id", "source", "text")
     )
     max_id = wide.agg(F.max("doc_id")).first()[0]
     cut = ((max_id or 0) * 9) // 10

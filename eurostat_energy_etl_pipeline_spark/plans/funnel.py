@@ -15,10 +15,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from eurostat_energy_etl_pipeline_spark.catalog import load_tables
-from eurostat_energy_etl_pipeline_spark.functions import (
-    presentation_sort,
-    widen_if_narrow,
-)
+from eurostat_energy_etl_pipeline_spark.functions import presentation_sort
 from eurostat_energy_etl_pipeline_spark.operators import text as T
 from eurostat_energy_etl_pipeline_spark.operators.dedup import (
     contaminated_ids,
@@ -308,13 +305,12 @@ def q185(spark, sf_dir):
     dominated: ~20 jobs (cut's two window exchanges, decontamination's
     semi-join, the prefix-sum kernel's bucket pass, 8 accounting
     aggregates) x the measured 0.10-0.15 s/job floor."""
-    docs = load_tables(spark, sf_dir)["documents"]
     ntext = F.trim(F.regexp_replace(F.col("text"), r"\s+", " "))
     ntok = F.size(
         F.filter(T.whitespace_tokens(F.col("ntext")), lambda x: x != "")
     ).cast("long")
     base = (
-        widen_if_narrow(docs)
+        load_tables(spark, sf_dir).wide("documents")
         .select(
             "doc_id",
             "lang",
@@ -1005,13 +1001,12 @@ def _funnel_input(spark, sf_dir):
     """The ONE pinned documents scan every incremental-funnel query
     derives its slices from, plus the max doc_id (an O(1) driver scalar
     under the audited-collect contract)."""
-    docs = load_tables(spark, sf_dir)["documents"]
     ntext = F.trim(F.regexp_replace(F.col("text"), r"\s+", " "))
     ntok = F.size(
         F.filter(T.whitespace_tokens(F.col("ntext")), lambda x: x != "")
     ).cast("long")
     base_all = (
-        widen_if_narrow(docs)
+        load_tables(spark, sf_dir).wide("documents")
         .select(
             "doc_id",
             "lang",

@@ -18,7 +18,6 @@ from eurostat_energy_etl_pipeline_spark.functions import (
     portable_round,
     portable_round_sql,
     presentation_sort,
-    widen_if_narrow,
 )
 from eurostat_energy_etl_pipeline_spark.operators import dedup as D
 from eurostat_energy_etl_pipeline_spark.operators import similarity as S
@@ -323,7 +322,7 @@ def q28(spark, sf_dir):
     fixed tie-break order)."""
     t = load_tables(spark, sf_dir)
     return (
-        widen_if_narrow(t["documents"])
+        t.wide("documents")
         .select(T.lang_id(F.col("text")).alias("lang_pred"))
         .groupBy("lang_pred")
         .agg(F.count(F.lit(1)).alias("docs"))
@@ -349,7 +348,7 @@ def q29(spark, sf_dir):
     t = load_tables(spark, sf_dir)
     c = F.col("text")
     return (
-        widen_if_narrow(t["documents"])
+        t.wide("documents")
         .select("lang", T.token_count(c).alias("nt"), T.bpe_ish_token_count(c).alias("nb"))
         .groupBy("lang")
         .agg(
@@ -389,7 +388,7 @@ def q30(spark, sf_dir):
     t = load_tables(spark, sf_dir)
     score = T.quality_score(F.col("text"))
     return (
-        widen_if_narrow(t["documents"])
+        t.wide("documents")
         .select(
             F.round(F.floor(score * 10).cast("double") / 10, 1).alias("bucket")
         )
@@ -1029,7 +1028,7 @@ def q79(spark, sf_dir):
     )
 
     t = load_tables(spark, sf_dir)
-    emb = widen_if_narrow(t["embeddings"])
+    emb = t.wide("embeddings")
     emax = _max_abs(F.col("embedding"))
     scale = F.lit(127.0) / emax
     per_vec = emb.where(emax > 0).select(
@@ -1305,7 +1304,7 @@ def q91(spark, sf_dir):
         lloyd_update,
     )
 
-    e = widen_if_narrow(load_tables(spark, sf_dir)["embeddings"])
+    e = load_tables(spark, sf_dir).wide("embeddings")
     cents = [
         (int(r["vec_id"]), [float(x) for x in r["embedding"]])
         for r in e.where(F.col("vec_id") < 8).orderBy("vec_id").collect()
@@ -1363,7 +1362,7 @@ def q97(spark, sf_dir):
         semantic_dedup_keep_list,
     )
 
-    e = widen_if_narrow(load_tables(spark, sf_dir)["embeddings"])
+    e = load_tables(spark, sf_dir).wide("embeddings")
     cents = [
         (int(r["vec_id"]), [float(x) for x in r["embedding"]])
         for r in e.where(F.col("vec_id") < 8).orderBy("vec_id").collect()
@@ -1442,7 +1441,7 @@ def q92(spark, sf_dir):
     exact), clean docs rejoin with coverage 0."""
     t = load_tables(spark, sf_dir)
     return ordered_output(
-        D.dup_span_coverage(widen_if_narrow(t["documents"]), k=8), "id"
+        D.dup_span_coverage(t.wide("documents"), k=8), "id"
     )
 
 
@@ -1578,7 +1577,7 @@ def q108(spark, sf_dir):
     )
     nf = float(n)
     base = pin(
-        widen_if_narrow(li).select(
+        t.wide("lineitem").select(
             (F.col("l_quantity") / F.lit(float(qm))).alias("xq"),
             F.col("l_discount").alias("xd"),
             (F.col("l_extendedprice") / F.lit(float(ym))).alias("y"),
@@ -1785,8 +1784,7 @@ def q126(spark, sf_dir):
     for its 1e-4 readout, a pairwise cosine ranked at 1e-6 is not);
     centroid products grid to 1e-12 before the decimal fold, norms and
     the final division are single IEEE ops."""
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    e = widen_if_narrow(emb).select(
+    e = load_tables(spark, sf_dir).wide("embeddings").select(
         "label",
         F.posexplode(
             F.transform(F.col("embedding"), lambda x: x.cast("double"))
@@ -1915,11 +1913,11 @@ def q127(spark, sf_dir):
     certifies all three iterations bit-for-bit."""
     import math as _math
 
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    d = emb.agg(F.max(F.size("embedding"))).collect()[0][0]
+    t = load_tables(spark, sf_dir)
+    d = t["embeddings"].agg(F.max(F.size("embedding"))).collect()[0][0]
     dec = "decimal(30,12)"
     vd = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    flat = widen_if_narrow(emb).select(
+    flat = t.wide("embeddings").select(
         F.posexplode(
             F.flatten(
                 F.transform(
@@ -2080,7 +2078,6 @@ def q137(spark, sf_dir):
     4-row literal budget spine; the only aggregate is the 4-group
     rollup. Per-row ratios grid to 1e-9 before the decimal-fold mean so
     the cross-row sum is order-independent."""
-    emb = load_tables(spark, sf_dir)["embeddings"]
     budgets = F.array([F.lit(d) for d in (8, 16, 32, 64)])
     vd = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     energy = lambda col: F.aggregate(  # noqa: E731
@@ -2089,7 +2086,7 @@ def q137(spark, sf_dir):
         lambda acc, x: acc + x,
     )
     per = (
-        widen_if_narrow(emb)
+        load_tables(spark, sf_dir).wide("embeddings")
         .select(vd.alias("v"), F.explode(budgets).alias("d"))
         .select(
             "d",
@@ -2185,7 +2182,7 @@ def q150(spark, sf_dir):
     collapses to |classes|^2 confusion cells in one map-side-combined
     aggregate; metrics are computed on the domain-bounded cell table."""
     t = load_tables(spark, sf_dir)
-    pred = widen_if_narrow(t["documents"]).select(
+    pred = t.wide("documents").select(
         F.col("lang").alias("actual"),
         T.lang_id(F.col("text")).alias("predicted"),
     )
@@ -3482,7 +3479,7 @@ def q174(spark, sf_dir):
     payload volume of one event type — at 100 TB you'd certify per
     (type, day) partition instead; the per-partition md5 recipe is
     unchanged."""
-    ev = widen_if_narrow(load_tables(spark, sf_dir)["events"])
+    ev = load_tables(spark, sf_dir).wide("events")
     r = ev.select(
         "event_id",
         "event_type",

@@ -23,8 +23,8 @@ from eurostat_energy_etl_pipeline_spark.functions import (
     exact_avg,
     exact_sum,
     portable_round,
+    keyed_compute_width,
     presentation_sort,
-    widen_keyed,
 )
 from eurostat_energy_etl_pipeline_spark.plans import pin, query
 
@@ -1224,7 +1224,7 @@ def q133_basket_pairs(spark, sf_dir):
         )
         # r15: pin at COMPUTE width — the cached partitioning dictates
         # the pair-expansion stage's width (guide §2.5, the q182 fix)
-        .transform(widen_keyed, "ok")
+        .repartition(keyed_compute_width(li), "ok")
         .groupBy("ok")
         .agg(F.sort_array(F.collect_set("pk")).alias("ps"))
         .transform(pin)  # shared by basket count + item supports + pairs
@@ -1897,7 +1897,7 @@ def q182(spark, sf_dir):
     # pair expansion (Generate x Generate + partial pair count) runs at
     # the baskets exchange's width, and the byte-sized interactive
     # width (4) starved it; same exchange count, warehouse unchanged.
-    baskets = widen_keyed(li, "o").groupBy("o").agg(
+    baskets = li.repartition(keyed_compute_width(li), "o").groupBy("o").agg(
         F.sort_array(F.collect_set("p")).alias("ps")
     )
     # emit BOTH orientations scan-side (each canonical pair as (a,b) AND
@@ -2211,7 +2211,7 @@ def q191(spark, sf_dir):
             "o", "p"
         )
     )
-    # r15 note: q182's widen_keyed is deliberately NOT applied here —
+    # r15 note: q182's compute-width repartition is deliberately NOT applied here —
     # the pinned `tr` is already o-partitioned (the sessionizing window
     # exchange), so groupBy("o") adds no exchange at all; widening would
     # ADD one (measured 1.16 -> 1.37 s, reverted).

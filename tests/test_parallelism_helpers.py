@@ -1,19 +1,25 @@
-"""Guards for the two round-2 plan-shape helpers:
+"""Guards for the plan-shape helpers:
 
 - `widen_if_narrow` must widen a single-partition scan to the session's
-  parallelism, leave already-wide inputs untouched (the 100 TB case must
-  not gain a shuffle), and respect an explicit target.
+  parallelism and leave already-wide inputs untouched (the 100 TB case
+  must not gain a shuffle).
+- The catalog owns table width: `TableCatalog.wide` probes each table once
+  per session, and no plan module probes partitions itself.
 - `presentation_sort` must produce exactly one output partition in the
   requested total order without scheduling a range-sample job.
 - `_normalize_table` must canonicalize every documented timestamp column
   from any physical encoding the fixtures have shipped with.
 """
 
+import re
+from pathlib import Path
+
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
+from eurostat_energy_etl_pipeline_spark import catalog, plans
 from eurostat_energy_etl_pipeline_spark.catalog import TableCatalog, _normalize_table
 from eurostat_energy_etl_pipeline_spark.functions import (
     presentation_sort,
@@ -30,13 +36,51 @@ def test_widen_if_narrow_widens_single_partition_scan(spark, sf_dir):
 
 
 def test_widen_if_narrow_is_noop_on_wide_input(spark):
-    df = spark.range(0, 1000, numPartitions=64)
-    assert widen_if_narrow(df, target=32) is df
+    wider = spark.sparkContext.defaultParallelism + 1
+    df = spark.range(0, 1000, numPartitions=wider)
+    assert widen_if_narrow(df) is df
 
 
-def test_widen_if_narrow_explicit_target(spark):
-    df = spark.range(0, 100, numPartitions=1)
-    assert widen_if_narrow(df, target=7).rdd.getNumPartitions() == 7
+def test_catalog_decides_table_width_once(spark, sf_dir, monkeypatch):
+    """Three documents plans built in one session probe `documents` once
+    and share one widened handle (q117 alone probed it twice when every
+    plan guarded its own scan)."""
+    probed = []
+
+    def probe(df):
+        probed.append(df)
+        return widen_if_narrow(df)
+
+    monkeypatch.setattr(catalog, "widen_if_narrow", probe)
+    t = TableCatalog(spark, sf_dir)
+    key = (spark.sparkContext.applicationId, sf_dir)
+    monkeypatch.setitem(catalog._TABLE_CACHE, key, t)
+    plans.load_all()
+    names = ("q110_dedup_apply", "q115_pipeline", "q141_substring_dedup")
+    for name in names:
+        plans.drop_plan(name)  # a plan cached by an earlier test skips its build
+    for name in names:
+        plans.QUERIES[name](spark, sf_dir)
+
+    assert len(probed) == 1 and probed[0] is t["documents"]
+    assert t.wide("documents") is t.wide("documents")
+    # single-file fixture: one scan partition, widened to the session's
+    assert t.wide("documents").rdd.getNumPartitions() == (
+        spark.sparkContext.defaultParallelism
+    )
+
+
+def test_plans_leave_table_width_to_the_catalog():
+    """Regrowth guard: plan modules read widened tables through
+    `TableCatalog.wide`; only operators guard their own inputs."""
+    guard = re.compile(r"widen_if_narrow|\.rdd\.getNumPartitions")
+    pkg = Path(catalog.__file__).parent
+    found = sorted(
+        f.relative_to(pkg).as_posix()
+        for f in (pkg / "plans").rglob("*.py")
+        if guard.search(f.read_text())
+    )
+    assert found == []
 
 
 def test_presentation_sort_single_partition_total_order(spark):
